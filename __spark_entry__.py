@@ -267,16 +267,17 @@ def q_ddsketch_udaf_textlen_by_role(spark: SparkSession, sf_dir: str) -> DataFra
     """UDAF path (two-phase mapInPandas partial -> merge): same quantiles as
     the relational path, via the encoded-sketch value column."""
     sketches = dd.ddsketch_agg(
-        _text_len_by_role(spark, sf_dir), "v", ["role"], CFG
+        _text_len_by_role(spark, sf_dir), "v", ["role"], CFG, strategy="combine"
     )
     out = dd.with_summary(dd.with_quantiles(sketches, QS, prefix="p"))
     return out.select("role", "cnt", "p50", "p95", "p99").orderBy("role")
 
 
 def q_ddsketch_udaf_bins_strategy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Third UDAF build strategy ('bins'): relational bins + single-scan
-    exact-stat partials assembled into encoded blobs — must produce the
-    identical quantiles/count as the combine topology (same oracle)."""
+    """The default UDAF build strategy ('bins'): relational bins +
+    single-scan exact-stat partials assembled into encoded blobs — must
+    produce the identical quantiles/count as the combine topology (same
+    oracle)."""
     sketches = dd.ddsketch_agg(
         _text_len_by_role(spark, sf_dir), "v", ["role"], CFG, strategy="bins"
     )

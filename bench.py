@@ -238,12 +238,13 @@ def main() -> None:
     )
     turns_per_sec = SYNTH_TURNS / dt
 
-    # the same build through the UDAF (sketch-value) path
+    # the same build through the UDAF (sketch-value) path, two-phase
     stage(
         "synth_ddsketch_udaf",
         2,
         lambda: dd.with_quantiles(
-            dd.ddsketch_agg(src, "v", ["role"], cfg), (0.5, 0.95, 0.99)
+            dd.ddsketch_agg(src, "v", ["role"], cfg, strategy="combine"),
+            (0.5, 0.95, 0.99),
         ),
     )
 

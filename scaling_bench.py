@@ -125,7 +125,8 @@ def job():
         # CPU-bound per byte: Arrow transfer + vectorized numpy partial build
         # + encode + streaming merge (the python-path operator profile)
         return dd.with_quantiles(
-            dd.ddsketch_agg(src, "v", ["role", "tool"], cfg), (0.5, 0.95, 0.99)
+            dd.ddsketch_agg(src, "v", ["role", "tool"], cfg, strategy="combine"),
+            (0.5, 0.95, 0.99),
         ).count()
     if job_kind == "udaf_bins":
         # the boundary mitigation: blobs assembled FROM the relational bins

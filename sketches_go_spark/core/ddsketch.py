@@ -303,19 +303,23 @@ class DDSketch:
         neg_total = float(neg_cum[-1]) if neg_cum.size else 0.0
 
         ranks = qs * (total - 1)  # ddsketch.go:181 (rank convention)
-        out = np.empty_like(ranks)
-        for i, rank in enumerate(ranks):
-            if rank < neg_total:
-                # reversed rank into the negative store (ddsketch.go:184-185)
-                r = max(neg_total - 1 - rank, 0.0)
-                k = min(np.searchsorted(neg_cum, r, side="right"), self.neg_idx.size - 1)
-                out[i] = -self.mapping.value_scalar(int(self.neg_idx[k]))
-            elif rank < neg_total + self.zero_count:
-                out[i] = 0.0
-            else:
-                r = max(rank - self.zero_count - neg_total, 0.0)
-                k = min(np.searchsorted(pos_cum, r, side="right"), self.pos_idx.size - 1)
-                out[i] = self.mapping.value_scalar(int(self.pos_idx[k]))
+        in_neg = ranks < neg_total
+        in_zero = ~in_neg & (ranks < neg_total + self.zero_count)
+        in_pos = ~(in_neg | in_zero)
+        # reversed rank into the negative store (ddsketch.go:184-185)
+        r_neg = np.maximum(neg_total - 1 - ranks[in_neg], 0.0)
+        r_pos = np.maximum(ranks[in_pos] - self.zero_count - neg_total, 0.0)
+        keys = np.zeros(ranks.size, dtype=np.int64)
+        keys[in_neg] = self.neg_idx[
+            np.minimum(np.searchsorted(neg_cum, r_neg, side="right"), self.neg_idx.size - 1)
+        ]
+        keys[in_pos] = self.pos_idx[
+            np.minimum(np.searchsorted(pos_cum, r_pos, side="right"), self.pos_idx.size - 1)
+        ]
+        # one vectorized mapping call for all qs: each call pays numpy's
+        # array and errstate set-up
+        values = self.mapping.value(keys)
+        out = np.where(in_neg, -values, np.where(in_zero, 0.0, values))
         if clamp_exact:
             out = np.clip(out, self.exact_min, self.exact_max)
         return out
@@ -343,10 +347,12 @@ class DDSketch:
     def sum_approx(self) -> float:
         """GetSum = sum over bins of value*count (ddsketch.go:261-267)."""
         s = 0.0
+        # np.sum rather than np.dot: numpy's pairwise order, which the batch
+        # decoder reproduces, where a BLAS dot's order is its own
         if self.pos_idx.size:
-            s += float(np.dot(self.mapping.value(self.pos_idx), self.pos_cnt))
+            s += float(np.sum(self.mapping.value(self.pos_idx) * self.pos_cnt))
         if self.neg_idx.size:
-            s -= float(np.dot(self.mapping.value(self.neg_idx), self.neg_cnt))
+            s -= float(np.sum(self.mapping.value(self.neg_idx) * self.neg_cnt))
         return s
 
     @property
@@ -483,3 +489,267 @@ def _merge_sorted_bins(
     if idx2.size == 0:
         return idx1, cnt1
     return _agg_bins(np.concatenate([idx1, idx2]), np.concatenate([cnt1, cnt2]))
+
+
+# ---------------------------------------------------------------------------
+# columnar form: many sketches as one flat bins relation
+# ---------------------------------------------------------------------------
+def _same_length_segments(lens: np.ndarray):
+    """Yield ``(n, rows)`` per distinct positive length: the segments holding
+    exactly ``n`` elements.  Gathering those into an ``(len(rows), n)``
+    matrix lets one row-wise numpy reduction stand in for a call per
+    segment with bit-identical results: a row-wise ``sum``/``cumsum`` over a
+    C-contiguous matrix takes the same (pairwise / sequential) order as the
+    1-d call on each row."""
+    order = np.argsort(lens, kind="stable")
+    cuts = np.flatnonzero(np.diff(lens[order])) + 1
+    for rows in np.split(order, cuts):
+        if rows.size and lens[rows[0]] > 0:
+            yield int(lens[rows[0]]), rows
+
+
+def _segment_sums(values: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """``values[s:s+n].sum()`` per segment, bit-identical to numpy's own
+    pairwise summation of each segment; 0.0 for an empty one."""
+    out = np.zeros(lens.size, dtype=np.float64)
+    for n, rows in _same_length_segments(lens):
+        out[rows] = values[starts[rows, None] + np.arange(n)].sum(axis=1)
+    return out
+
+
+def _segment_cumsums(values: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Flat array holding ``np.cumsum(values[s:s+n])`` at each segment's
+    positions (sequential, like the 1-d call); 0 elsewhere."""
+    out = np.zeros(values.size, dtype=np.float64)
+    for n, rows in _same_length_segments(lens):
+        cols = starts[rows, None] + np.arange(n)
+        out[cols] = np.cumsum(values[cols], axis=1)
+    return out
+
+
+def _segment_rank_positions(
+    cum: np.ndarray, starts: np.ndarray, lens: np.ndarray, ranks: np.ndarray
+) -> np.ndarray:
+    """KeyAtRank per (segment, rank) over flat cumulative counts: the flat
+    position of the first element with ``cum > rank``, clamped to the
+    segment's last (``min(searchsorted(cum, rank, 'right'), n - 1)``); -1
+    for an empty segment."""
+    pos = np.full(ranks.shape, -1, dtype=np.int64)
+    for n, rows in _same_length_segments(lens):
+        c = cum[starts[rows, None] + np.arange(n)]
+        for q in range(ranks.shape[1]):
+            k = (c <= ranks[rows, q, None]).sum(axis=1)
+            pos[rows, q] = starts[rows] + np.minimum(k, n - 1)
+    return pos
+
+
+def _offsets(group: np.ndarray, n: int) -> np.ndarray:
+    """Offsets of ``n`` groups in a flat array whose rows carry sorted group ids."""
+    return np.concatenate([[0], np.cumsum(np.bincount(group, minlength=n))]).astype(np.int64)
+
+
+@dataclass
+class DDSketchBatch:
+    """Many sketches in columnar form: one flat bins relation.
+
+    Sketch ``g`` owns the bins ``offsets[g]:offsets[g+1]`` of the parallel
+    ``sign`` (-1 or +1) / ``index`` / ``count`` arrays, sorted by
+    ``(sign, index)`` with one bin per index and sign: its negative store,
+    then its positive store.  The other fields hold one value per sketch;
+    ``exact_sum`` includes the Kahan compensation (``DDSketch.sum``) and
+    ``mappings[mapping_id[g]]`` is sketch ``g``'s index mapping (-1: none,
+    a null row of a decoded batch).
+
+    It is the shape the relational bins path already has.  The batch codec
+    (``core.encoding.encode_batch`` / ``decode_batch``) and :meth:`quantiles`
+    work on it without a DDSketch object per sketch.
+    """
+
+    offsets: np.ndarray
+    sign: np.ndarray
+    index: np.ndarray
+    count: np.ndarray
+    zero_count: np.ndarray
+    exact_count: np.ndarray
+    exact_sum: np.ndarray
+    exact_min: np.ndarray
+    exact_max: np.ndarray
+    mappings: list
+    mapping_id: np.ndarray
+
+    @property
+    def size(self) -> int:
+        return self.offsets.size - 1
+
+    def stores(self) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+        """(negative-store starts, sizes, positive-store starts, sizes)."""
+        lens = np.diff(self.offsets)
+        group = np.repeat(np.arange(self.size), lens)
+        n_neg = np.bincount(group[self.sign < 0], minlength=self.size)
+        starts = self.offsets[:-1]
+        return starts, n_neg, starts + n_neg, lens - n_neg
+
+    @classmethod
+    def from_sketches(cls, sketches: list) -> "DDSketchBatch":
+        """Columnar copy of DDSketch objects."""
+        mappings: list = []
+        mapping_id = np.empty(len(sketches), dtype=np.int64)
+        for g, s in enumerate(sketches):
+            mid = next((i for i, m in enumerate(mappings) if m.equals(s.mapping)), None)
+            if mid is None:
+                mid = len(mappings)
+                mappings.append(s.mapping)
+            mapping_id[g] = mid
+        stores = [(s.neg_idx, s.neg_cnt, s.pos_idx, s.pos_cnt) for s in sketches]
+        sizes = [st[0].size + st[2].size for st in stores]
+        return cls(
+            offsets=np.concatenate([[0], np.cumsum(sizes)]).astype(np.int64),
+            sign=np.concatenate(
+                [_EMPTY_IDX.astype(np.int8)]
+                + [np.repeat(np.int8([-1, 1]), [st[0].size, st[2].size]) for st in stores]
+            ),
+            index=np.concatenate([_EMPTY_IDX] + [x for st in stores for x in (st[0], st[2])]),
+            count=np.concatenate([_EMPTY_CNT] + [x for st in stores for x in (st[1], st[3])]),
+            zero_count=np.array([s.zero_count for s in sketches], dtype=np.float64),
+            exact_count=np.array([s.exact_count for s in sketches], dtype=np.float64),
+            exact_sum=np.array([s.sum for s in sketches], dtype=np.float64),
+            exact_min=np.array([s.exact_min for s in sketches], dtype=np.float64),
+            exact_max=np.array([s.exact_max for s in sketches], dtype=np.float64),
+            mappings=mappings,
+            mapping_id=mapping_id,
+        )
+
+    def sketch(self, g: int, config: DDSketchConfig | None = None) -> DDSketch:
+        """Sketch ``g`` as a DDSketch object (no collapse applied)."""
+        m = self.mappings[self.mapping_id[g]]
+        cfg = config or DDSketchConfig(alpha=m.relative_accuracy(), interpolation=m.interpolation)
+        s = DDSketch(config=cfg, mapping=m)
+        sl = slice(self.offsets[g], self.offsets[g + 1])
+        sg, ix, ct = self.sign[sl], self.index[sl], self.count[sl]
+        s.neg_idx, s.neg_cnt = ix[sg < 0], ct[sg < 0]
+        s.pos_idx, s.pos_cnt = ix[sg > 0], ct[sg > 0]
+        s.zero_count = float(self.zero_count[g])
+        s.exact_count = float(self.exact_count[g])
+        s.exact_sum = float(self.exact_sum[g])
+        s.exact_min = float(self.exact_min[g])
+        s.exact_max = float(self.exact_max[g])
+        return s
+
+    def collapsed(self, config: DDSketchConfig) -> "DDSketchBatch":
+        """Every sketch's ``_apply_collapse`` under ``config`` at once: a
+        store over ``max_bins`` folds its buckets into the kept range's edge
+        bucket, folded counts summed in index order as ``_collapse`` does."""
+        if config.collapse == COLLAPSE_NONE or self.index.size == 0:
+            return self
+        group = np.repeat(np.arange(self.size), np.diff(self.offsets))
+        new_store = np.ones(self.index.size, dtype=bool)
+        new_store[1:] = (group[1:] != group[:-1]) | (self.sign[1:] != self.sign[:-1])
+        store = np.cumsum(new_store) - 1
+        first = np.flatnonzero(new_store)
+        last = np.append(first[1:], self.index.size) - 1
+        over = (last - first + 1 > config.max_bins)[store]
+        if not over.any():
+            return self
+        m = config.max_bins
+        if config.collapse == COLLAPSE_LOWEST:
+            clamped = np.where(over, np.maximum(self.index, (self.index[last] - m + 1)[store]), self.index)
+        else:
+            clamped = np.where(over, np.minimum(self.index, (self.index[first] + m - 1)[store]), self.index)
+        new_bin = new_store.copy()
+        new_bin[1:] |= clamped[1:] != clamped[:-1]
+        heads = np.flatnonzero(new_bin)
+        return replace(
+            self,
+            offsets=_offsets(group[heads], self.size),
+            sign=self.sign[heads],
+            index=clamped[heads],
+            count=np.bincount(np.cumsum(new_bin) - 1, weights=self.count),
+        )
+
+    def merge_runs(self, run_starts: np.ndarray) -> "DDSketchBatch":
+        """Merge each run of consecutive sketches (``run_starts[r]`` up to
+        the next start) into one sketch, as :meth:`DDSketch.merge` would in
+        sketch order: bin, zero and exact counts add in that order, and the
+        exact sum takes the same two Kahan steps per merged sketch.  No
+        collapse: :meth:`collapsed` then folds each run's union once, which
+        unlike incremental merging does not depend on the sketch order."""
+        n_runs = run_starts.size
+        lens = np.diff(np.append(run_starts, self.size))
+        run_of = np.repeat(np.arange(n_runs), lens)
+        if np.any(self.mapping_id != self.mapping_id[run_starts][run_of]):
+            raise ValueError("cannot merge sketches with different index mappings")
+        group = np.repeat(run_of, np.diff(self.offsets))
+        order = np.lexsort((self.index, 2 * group + (self.sign > 0)))  # stable
+        g, sg, ix = group[order], self.sign[order], self.index[order]
+        new_bin = np.ones(order.size, dtype=bool)
+        new_bin[1:] = (g[1:] != g[:-1]) | (sg[1:] != sg[:-1]) | (ix[1:] != ix[:-1])
+        heads = np.flatnonzero(new_bin)
+
+        # kahan(sum), then kahan(0.0) for the merged sketch's (zero)
+        # compensation, exactly as DDSketch.merge folds each sketch in
+        s = self.exact_sum[run_starts].copy()
+        c = np.zeros(n_runs)
+        for j in range(1, int(lens.max(initial=1))):
+            live = lens > j
+            for v in (self.exact_sum[run_starts[live] + j], 0.0):
+                tmp = v - c[live]
+                t = s[live] + tmp
+                c[live] = t - s[live] - tmp
+                s[live] = t
+        return DDSketchBatch(
+            offsets=_offsets(g[heads], n_runs),
+            sign=sg[heads],
+            index=ix[heads],
+            count=np.bincount(np.cumsum(new_bin) - 1, weights=self.count[order]),
+            zero_count=np.bincount(run_of, weights=self.zero_count, minlength=n_runs),
+            exact_count=np.bincount(run_of, weights=self.exact_count, minlength=n_runs),
+            exact_sum=s + c,
+            exact_min=np.minimum.reduceat(self.exact_min, run_starts),
+            exact_max=np.maximum.reduceat(self.exact_max, run_starts),
+            mappings=self.mappings,
+            mapping_id=self.mapping_id[run_starts],
+        )
+
+    def quantiles(self, qs, clamp_exact: bool = False) -> np.ndarray:
+        """``(size, len(qs))`` estimates.  Row ``g`` is exactly what
+        :meth:`DDSketch.quantiles` returns for sketch ``g`` (same rank
+        convention, negative/zero/positive branch, KeyAtRank and
+        ``clamp_exact``), and NaN for an empty sketch."""
+        qs = np.asarray(qs, dtype=np.float64)
+        if np.any((qs < 0) | (qs > 1)):
+            raise ValueError("quantile must be between 0 and 1")
+        neg_start, n_neg, pos_start, n_pos = self.stores()
+        # DDSketch.count's order: zero + pos.sum() + neg.sum()
+        total = (
+            self.zero_count
+            + _segment_sums(self.count, pos_start, n_pos)
+            + _segment_sums(self.count, neg_start, n_neg)
+        )
+        starts = np.concatenate([neg_start, pos_start])
+        lens = np.concatenate([n_neg, n_pos])
+        cum = _segment_cumsums(self.count, starts, lens)
+        neg_total = np.zeros(self.size)
+        has_neg = n_neg > 0
+        neg_total[has_neg] = cum[neg_start[has_neg] + n_neg[has_neg] - 1]
+
+        zero = self.zero_count[:, None]
+        neg_total = neg_total[:, None]
+        ranks = qs[None, :] * (total[:, None] - 1)
+        in_neg = ranks < neg_total
+        in_zero = ~in_neg & (ranks < neg_total + zero)
+        r_neg = np.maximum(neg_total - 1 - ranks, 0.0)
+        r_pos = np.maximum(ranks - zero - neg_total, 0.0)
+        pos = _segment_rank_positions(cum, starts, lens, np.concatenate([r_neg, r_pos]))
+        pos = np.where(in_neg, pos[: self.size], pos[self.size :])
+        # an empty sketch, or a rank in an empty store (DDSketch raises)
+        valid = (total[:, None] != 0) & (in_zero | (pos >= 0))
+        keys = np.where(valid & ~in_zero, self.index[np.maximum(pos, 0)], 0) if self.index.size else pos * 0
+        values = np.full(keys.shape, np.nan)
+        mapping_id = np.broadcast_to(self.mapping_id[:, None], keys.shape)
+        for i, m in enumerate(self.mappings):
+            sel = valid & (mapping_id == i)
+            values[sel] = m.value(keys[sel])
+        out = np.where(in_neg, -values, np.where(in_zero, 0.0, values))
+        if clamp_exact:
+            out = np.clip(out, self.exact_min[:, None], self.exact_max[:, None])
+        return out

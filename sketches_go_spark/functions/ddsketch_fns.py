@@ -11,16 +11,19 @@ payload after partial agg is at most ``groups x buckets`` rows regardless of
 input size.
 
 **UDAF path:** the sketch as a *value* — an encoded ``BinaryType`` blob.
-Three build strategies (see :func:`ddsketch_agg`): ``combine`` (vectorized
-``mapInPandas`` partial per input partition — map-side combine the Arrow
-way — then a shuffle of the tiny partials and a STREAMING sorted-run merge),
-``repartition`` (raw shuffle once, build in place; high key cardinality),
-and ``bins`` (relational bins + single-scan exact-stat partials, blobs
-assembled from the tiny bins relation; fastest at low/medium cardinality).
-Needed for bounded-memory collapsing semantics, sketch-as-a-column
-storage/rollup, streaming state and checkpointed resume.  The blob is the
-reference-compatible binary format (core.encoding), so shuffle/checkpoint
-bytes stay small.
+Three build strategies (see :func:`ddsketch_agg`): ``bins``, the default
+(relational bins + single-scan exact-stat partials; the blobs are a
+serialization of that tiny bins relation, assembled a batch of whole
+groups at a time), ``combine`` (vectorized ``mapInPandas`` partial per input
+partition — map-side combine the Arrow way — then a shuffle of the tiny
+partials and a STREAMING sorted-run merge) and ``repartition`` (raw shuffle
+once, build in place).  Python never walks bins or rows one by one: blobs
+are written, read and queried a whole Arrow batch at a time
+(``core.encoding.encode_batch`` / ``decode_batch``,
+``DDSketchBatch.quantiles``).  Needed for bounded-memory collapsing
+semantics, sketch-as-a-column storage/rollup, streaming state and
+checkpointed resume.  The blob is the reference-compatible binary format
+(core.encoding), so shuffle/checkpoint bytes stay small.
 
 Both paths share the mapping math and agree on bucket semantics; parity is
 asserted in tests (same quantile estimates vs the same oracle).
@@ -33,11 +36,11 @@ dense_store.go:153-165; MergeWith ddsketch.go:302-310.
 
 from __future__ import annotations
 
-import math
 from typing import Iterable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -53,10 +56,11 @@ from pyspark.sql.window import Window
 from sketches_go_spark.core.ddsketch import (
     COLLAPSE_LOWEST,
     COLLAPSE_NONE,
-    DDSketch,
+    DDSketchBatch,
     DDSketchConfig,
+    _offsets,
 )
-from sketches_go_spark.core.encoding import decode_sketch, encode_sketch
+from sketches_go_spark.core.encoding import decode_batch, encode_batch
 from sketches_go_spark.functions.expressions import bucket_value, sign_bucket
 
 DEFAULT_QUANTILES = (0.5, 0.95, 0.99)
@@ -267,10 +271,95 @@ def summary_from_bins(
 # =====================================================================
 # UDAF path — sketch as an encoded binary value
 # =====================================================================
-def _key_df(pdf: pd.DataFrame, keys: Sequence[str]) -> pd.Series:
-    if len(keys) == 1:
-        return pdf[keys[0]]
-    return pd.Series(list(zip(*[pdf[k] for k in keys])), index=pdf.index)
+def _same_key(a: tuple, b: tuple) -> bool:
+    """Group-key equality with every null (None, NaN, NaT) equal to every
+    other: Spark groups nulls together, pandas hands them over as NaN."""
+    return all(x == y or (pd.isna(x) and pd.isna(y)) for x, y in zip(a, b))
+
+
+def _run_starts(pdf: pd.DataFrame, kcols: Sequence[str], prev_key: tuple | None = None) -> np.ndarray:
+    """Positions where a new key run starts in a key-sorted frame.  Row 0
+    starts one unless it continues ``prev_key``, the key of the row before
+    the frame."""
+    new = np.zeros(len(pdf), dtype=bool)
+    for k in kcols:
+        a = pdf[k].to_numpy()
+        null = pd.isna(a)
+        new[1:] |= (a[1:] != a[:-1]) & ~(null[1:] & null[:-1])
+    new[0] = prev_key is None or not _same_key(prev_key, tuple(pdf[k].iat[0] for k in kcols))
+    return np.flatnonzero(new)
+
+
+def _whole_runs(batches: Iterator[pd.DataFrame], kcols: Sequence[str]) -> Iterator[pd.DataFrame]:
+    """Regroup a stream of key-sorted Arrow batches into frames that hold
+    only whole key runs.  Only the last, possibly unfinished run of a batch
+    is carried into the next one, so memory stays at one batch plus one
+    group however many groups the partition holds."""
+    pending: list[pd.DataFrame] = []
+    prev_key = None
+    for pdf in batches:
+        if pdf.empty:
+            continue
+        starts = _run_starts(pdf, kcols, prev_key)
+        prev_key = tuple(pdf[k].iat[-1] for k in kcols)
+        if starts.size == 0:  # the whole batch continues the pending run
+            pending.append(pdf)
+            continue
+        done = pending + [pdf.iloc[: starts[-1]]]
+        pending = [pdf.iloc[starts[-1]:]]
+        frame = pd.concat(done, ignore_index=True)
+        if len(frame):
+            yield frame
+    if pending:
+        yield pd.concat(pending, ignore_index=True)
+
+
+def _blob_buffers(blobs: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """A column of blobs as (data, offsets, valid) without a Python loop."""
+    arr = pa.array(blobs, type=pa.large_binary())
+    _, offsets, data = arr.buffers()
+    offsets = np.frombuffer(offsets, dtype=np.int64)[arr.offset : arr.offset + len(arr) + 1]
+    data = np.frombuffer(data, dtype=np.uint8) if data is not None else np.empty(0, np.uint8)
+    return data, offsets, ~arr.is_null().to_numpy(zero_copy_only=False)
+
+
+def _sketch_rows(frame: pd.DataFrame, starts: np.ndarray, kcols: Sequence[str], batch: DDSketchBatch) -> pd.DataFrame:
+    """(keys..., sketch) rows: the key of each run start and its blob."""
+    data, offsets = encode_batch(batch)
+    blobs = pa.Array.from_buffers(
+        pa.large_binary(), batch.size, [None, pa.py_buffer(offsets), pa.py_buffer(data)]
+    )
+    out = pd.DataFrame({k: frame[k].to_numpy()[starts] for k in kcols})
+    out["sketch"] = blobs.to_numpy(zero_copy_only=False)
+    return out
+
+
+def _sketches_from_bins(frame: pd.DataFrame, kcols: Sequence[str], config: DDSketchConfig) -> pd.DataFrame:
+    """One blob per key run of an extended bins frame sorted by (keys,
+    sign, bucket) with columns count, vw (sum of v*w), mn and mx: the
+    bins become a DDSketchBatch (sign-0 rows its zero counts), collapse
+    and encoding run once for the whole frame."""
+    starts = _run_starts(frame, kcols)
+    n_groups = starts.size
+    group = np.repeat(np.arange(n_groups), np.diff(np.append(starts, len(frame))))
+    sign = frame["sign"].to_numpy(dtype=np.int8)
+    count = frame["count"].to_numpy(dtype=np.float64)
+    zero = sign == 0
+    bins = ~zero
+    batch = DDSketchBatch(
+        offsets=_offsets(group[bins], n_groups),
+        sign=sign[bins],
+        index=frame["bucket"].to_numpy(dtype=np.int64)[bins],
+        count=count[bins],
+        zero_count=np.bincount(group[zero], weights=count[zero], minlength=n_groups),
+        exact_count=np.bincount(group, weights=count, minlength=n_groups),
+        exact_sum=np.bincount(group, weights=frame["vw"].to_numpy(dtype=np.float64), minlength=n_groups),
+        exact_min=np.minimum.reduceat(frame["mn"].to_numpy(dtype=np.float64), starts),
+        exact_max=np.maximum.reduceat(frame["mx"].to_numpy(dtype=np.float64), starts),
+        mappings=[config.mapping()],
+        mapping_id=np.zeros(n_groups, dtype=np.int64),
+    )
+    return _sketch_rows(frame, starts, kcols, batch.collapsed(config))
 
 
 def ddsketch_partial(
@@ -280,10 +369,19 @@ def ddsketch_partial(
     config: DDSketchConfig | None = None,
     weight_col: str | None = None,
     metrics=None,
+    flush_groups: int = 50_000,
 ) -> DataFrame:
-    """Phase 1: one partial sketch per (group x input-partition), built
+    """Phase 1: partial sketches per (group x input-partition), built
     inside ``mapInPandas`` — the Arrow-side equivalent of map-side combine
     (applyInPandas alone would ship every raw row of a group to one task).
+
+    Each Arrow batch reduces to an extended bins relation, (group, sign,
+    bucket) → count, sum of v*w, min v, max v, with one C-path pandas
+    groupby.  Buffered bins are bounded like ``hll_agg``'s: at
+    ``4 x flush_groups`` bin rows (an upper bound on the groups) they are
+    re-aggregated and emitted as blobs through the batch encoder, and the
+    merge stage folds a group's several partials.  Per-task memory is
+    O(flush_groups) whatever the key cardinality.
 
     Output: (keys..., sketch: binary).
     """
@@ -294,14 +392,18 @@ def ddsketch_partial(
     cols = list(keys) + [value_col] + ([weight_col] if weight_col else [])
     kcols = list(keys)
 
+    def drain(parts: list[pd.DataFrame]) -> pd.DataFrame:
+        bins = (
+            pd.concat(parts, ignore_index=True)
+            .groupby([*kcols, "sign", "bucket"], sort=True, dropna=False)
+            .agg(count=("count", "sum"), vw=("vw", "sum"), mn=("mn", "min"), mx=("mx", "max"))
+            .reset_index()
+        )
+        return _sketches_from_bins(bins, kcols, config)
+
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # fully vectorized: per Arrow batch, compute (sign, bucket) arrays
-        # once, reduce to per-(group, sign, bucket) bins with a C-path pandas
-        # groupby, and only materialize python DDSketch objects ONCE per
-        # group at partition end — no per-group work inside the batch loop,
-        # so high-cardinality keys (conv_id) cost the same per row as one key
-        bin_parts: list[pd.DataFrame] = []
-        stat_parts: list[pd.DataFrame] = []
+        parts: list[pd.DataFrame] = []
+        buffered = 0
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -328,8 +430,8 @@ def ddsketch_partial(
                 bucket[neg] = mapping.index(-v[neg])
             # factorize string keys ONCE per batch and aggregate on the int
             # codes — an all-integer groupby is ~30% cheaper than hashing
-            # python string objects per row twice (measured; the hot task of
-            # the skewed repartition build runs this loop over ~8.7M rows).
+            # python string objects per row (measured; the hot task of the
+            # skewed repartition build runs this loop over ~8.7M rows).
             # Per-group accumulation order is unchanged (factorize preserves
             # row order, groupby reduces in occurrence order either way), so
             # the float sums are bit-identical to the direct-key groupby.
@@ -343,67 +445,22 @@ def ddsketch_partial(
             frame["sign"] = sign
             frame["bucket"] = bucket
             frame["w"] = w
+            frame["vw"] = v * w
+            frame["v"] = v
             part = (
-                frame.groupby([*ccols, "sign", "bucket"], sort=False, dropna=False)["w"]
-                .sum()
+                frame.groupby([*ccols, "sign", "bucket"], sort=False, dropna=False)
+                .agg(count=("w", "sum"), vw=("vw", "sum"), mn=("v", "min"), mx=("v", "max"))
                 .reset_index()
             )
             for c, k in zip(ccols, kcols):
                 part[k] = uniqs[k].take(part[c].to_numpy())
-            bin_parts.append(part[[*kcols, "sign", "bucket", "w"]])
-            sframe = pd.DataFrame({c: codes[k] for c, k in zip(ccols, kcols)})
-            sframe["w"] = w
-            sframe["vw"] = v * w
-            sframe["v"] = v
-            spart = (
-                sframe.groupby(ccols, sort=False, dropna=False)
-                .agg(cnt=("w", "sum"), s=("vw", "sum"), mn=("v", "min"), mx=("v", "max"))
-                .reset_index()
-            )
-            for c, k in zip(ccols, kcols):
-                spart[k] = uniqs[k].take(spart[c].to_numpy())
-            stat_parts.append(spart[[*kcols, "cnt", "s", "mn", "mx"]])
-        if not bin_parts:
-            return
-        bins = (
-            pd.concat(bin_parts, ignore_index=True)
-            .groupby([*kcols, "sign", "bucket"], sort=True, dropna=False)["w"]
-            .sum()
-            .reset_index()
-        )
-        stats = (
-            pd.concat(stat_parts, ignore_index=True)
-            .groupby(kcols, sort=False, dropna=False)
-            .agg(cnt=("cnt", "sum"), s=("s", "sum"), mn=("mn", "min"), mx=("mx", "max"))
-        )
-        # dict lookups instead of per-group .loc (O(1), matters at 10^5 groups)
-        # keys normalized via _norm_key: pandas emits distinct NaN objects for
-        # null group keys, and NaN-keyed dict lookups miss (nan != nan)
-        stats_d = {
-            _norm_key(idx if isinstance(idx, tuple) else (idx,)): (r.cnt, r.s, r.mn, r.mx)
-            for idx, r in zip(stats.index, stats.itertuples(index=False))
-        }
-        rows = []
-        for gkey, sub in bins.groupby(kcols, sort=False, dropna=False):
-            gtuple = gkey if isinstance(gkey, tuple) else (gkey,)
-            sk = DDSketch(config=config)
-            sgn = sub["sign"].to_numpy()
-            bkt = sub["bucket"].to_numpy(dtype=np.int64)
-            cnt = sub["w"].to_numpy(dtype=np.float64)
-            p = sgn == 1
-            n = sgn == -1
-            # bins arrive sorted by (sign, bucket) asc -> both stores ascending
-            sk.pos_idx, sk.pos_cnt = bkt[p], cnt[p]
-            sk.neg_idx, sk.neg_cnt = bkt[n], cnt[n]
-            sk.zero_count = float(cnt[sgn == 0].sum())
-            sk._apply_collapse()
-            st = stats_d[_norm_key(gtuple)]
-            sk.exact_count = float(st[0])
-            sk.exact_sum = float(st[1])
-            sk.exact_min = float(st[2])
-            sk.exact_max = float(st[3])
-            rows.append((*gtuple, encode_sketch(sk)))
-        yield pd.DataFrame(rows, columns=list(keys) + ["sketch"])
+            parts.append(part[[*kcols, "sign", "bucket", "count", "vw", "mn", "mx"]])
+            buffered += len(part)
+            if buffered >= flush_groups * 4:
+                yield drain(parts)
+                parts, buffered = [], 0
+        if parts:
+            yield drain(parts)
 
     if metrics is not None:
         from sketches_go_spark.plans.metrics import instrument_map_in_pandas
@@ -412,66 +469,41 @@ def ddsketch_partial(
     return df.select(*cols).mapInPandas(build, schema=out_schema)
 
 
-def _norm_key(vals) -> tuple:
-    """Run-comparison key: NaN (which never equals itself) normalized to None
-    so a null-keyed group merges into ONE run instead of one row per partial
-    (nulls/NaNs sort together in sortWithinPartitions, so runs ARE contiguous
-    — only the equality check needs the normalization)."""
-    return tuple(
-        None if (isinstance(v, float) and v != v) else v for v in vals
-    )
-
-
 def ddsketch_merge(
     partials: DataFrame,
     keys: Sequence[str],
     config: DDSketchConfig | None = None,
     metrics=None,
+    co_located: bool = False,
 ) -> DataFrame:
     """Phase 2: shuffle the (tiny) partials by group key and merge
     (MergeWith semantics, ddsketch.go:302-310).
 
-    Implemented as repartition-by-key + sortWithinPartitions + a streaming
-    mapInPandas pass — NOT applyInPandas, whose per-group invocation costs
-    ~1 ms and dominates at high key cardinality (500k conv_ids would pay
-    ~8 min of pure invocation overhead; the streaming merge pays one python
-    decode per partial row instead)."""
+    Implemented as repartition-by-key (skipped when ``co_located``) +
+    sortWithinPartitions + a streaming mapInPandas pass — NOT applyInPandas,
+    whose per-group invocation costs ~1 ms and dominates at high key
+    cardinality.  Each batch of whole key runs is decoded at once
+    (``decode_batch``), merged run by run (``DDSketchBatch.merge_runs``:
+    bins, counts and the Kahan sum exactly as ``DDSketch.merge`` in partial
+    order; a collapsing config folds each run's union once) and re-encoded
+    at once."""
     config = config or DDSketchConfig()
     key_fields = [partials.schema[k] for k in keys]
     out_schema = StructType(list(key_fields) + [StructField("sketch", BinaryType())])
     kcols = list(keys)
 
     def merge_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cur_key: tuple | None = None
-        cur: DDSketch | None = None
-        out_rows: list[tuple] = []
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            key_arrays = [pdf[k].to_numpy() for k in kcols]
-            for i, blob in enumerate(pdf["sketch"]):
-                k = _norm_key(a[i] for a in key_arrays)
-                if k != cur_key:
-                    if cur is not None:
-                        out_rows.append((*cur_key, encode_sketch(cur)))
-                    cur_key = k
-                    cur = decode_sketch(bytes(blob), config=config)
-                else:
-                    cur.merge(decode_sketch(bytes(blob), config=config))
-            if len(out_rows) >= 10000:
-                yield pd.DataFrame(out_rows, columns=kcols + ["sketch"])
-                out_rows = []
-        if cur is not None:
-            out_rows.append((*cur_key, encode_sketch(cur)))
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=kcols + ["sketch"])
+        for frame in _whole_runs(batches, kcols):
+            starts = _run_starts(frame, kcols)
+            batch = decode_batch(*_blob_buffers(frame["sketch"]), config=config)
+            yield _sketch_rows(frame, starts, kcols, batch.merge_runs(starts).collapsed(config))
 
     if metrics is not None:
         from sketches_go_spark.plans.metrics import instrument_map_in_pandas
 
         merge_stream = instrument_map_in_pandas(merge_stream, metrics)
-    shuffled = partials.repartition(*kcols).sortWithinPartitions(*kcols)
-    return shuffled.mapInPandas(merge_stream, schema=out_schema)
+    shuffled = partials if co_located else partials.repartition(*kcols)
+    return shuffled.sortWithinPartitions(*kcols).mapInPandas(merge_stream, schema=out_schema)
 
 
 def ddsketch_agg(
@@ -480,46 +512,46 @@ def ddsketch_agg(
     keys: Sequence[str],
     config: DDSketchConfig | None = None,
     weight_col: str | None = None,
-    strategy: str = "combine",
+    strategy: str = "bins",
     metrics=None,
 ) -> DataFrame:
     """Sketch aggregation: (keys..., sketch: binary).
 
-    strategy='combine' (default): two-phase partial-per-partition → shuffle
-    tiny encoded partials → merge.  Optimal when groups repeat within input
-    partitions (low/medium key cardinality) — the map-side combine shrinks
-    the shuffle to ~groups x partitions blobs.
+    strategy='bins' (default): build the bins RELATIONALLY first (pure
+    Catalyst, whole-stage codegen, map-side combined — the fastest build
+    path), with the exact count/sum/min/max carried as three extra
+    bin-level aggregates in the SAME single scan, then assemble the blobs
+    from the tiny bins relation: key-run boundaries found with numpy, one
+    batch encode per Arrow batch, only the last unfinished group carried
+    across batches.  Arrow ships ``groups x buckets`` bin rows to Python
+    instead of every raw row.  On the benchmark's per_conv workload (~2k
+    groups of ~10 values, 4 cores) ``ddsketch_agg`` → ``with_quantiles``
+    takes ~43 % less CPU than with 'combine' as the default and the
+    per-sketch codec (README "UDAF blobs" has the A/B).
+
+    strategy='combine': two-phase partial-per-partition → shuffle tiny
+    encoded partials → merge.  The map-side combine shrinks the shuffle to
+    ~groups x partitions blobs when groups repeat within input partitions.
 
     strategy='repartition': shuffle the raw (keys, value) rows once so each
-    group lands wholly in one partition, then build final sketches in a
-    single vectorized pass — no merge stage, no per-partial decode.  Optimal
-    at high key cardinality (e.g. per-conv_id sketches, where map-side
-    combine finds nothing to combine and 'combine' would decode millions of
-    single-group partials).
-
-    strategy='bins': build the bins RELATIONALLY first (pure Catalyst,
-    whole-stage codegen, map-side combined — the fastest build path), with
-    the exact count/sum/min/max carried as three extra bin-level aggregates
-    in the SAME single scan, then assemble one encoded sketch per group from
-    the tiny bins relation.  Arrow ships ``groups x buckets`` bin rows to
-    Python instead of every raw row — the optimal shape when groups hold
-    many values (low/medium cardinality); degenerates to 'repartition' cost
-    when groups are tiny."""
+    group lands wholly in one partition, build the sketches there and merge
+    a group's flushed partials in place (no second shuffle)."""
     config = config or DDSketchConfig()
     if strategy == "repartition":
         cols = [value_col] + ([weight_col] if weight_col else [])
         shuffled = df.select(*keys, *cols).repartition(*keys)
-        return ddsketch_partial(shuffled, value_col, keys, config, weight_col, metrics)
-    if strategy == "bins":
-        return _ddsketch_agg_from_bins(
-            df, value_col, keys, config, weight_col, metrics
+        partials = ddsketch_partial(shuffled, value_col, keys, config, weight_col, metrics)
+        return ddsketch_merge(partials, keys, config, metrics, co_located=True)
+    if strategy == "combine":
+        return ddsketch_merge(
+            ddsketch_partial(df, value_col, keys, config, weight_col, metrics),
+            keys,
+            config,
+            metrics,
         )
-    return ddsketch_merge(
-        ddsketch_partial(df, value_col, keys, config, weight_col, metrics),
-        keys,
-        config,
-        metrics,
-    )
+    if strategy != "bins":
+        raise ValueError(f"unknown strategy {strategy!r}")
+    return _ddsketch_agg_from_bins(df, value_col, keys, config, weight_col, metrics)
 
 
 def _ddsketch_agg_from_bins(
@@ -533,7 +565,8 @@ def _ddsketch_agg_from_bins(
     """strategy='bins' build: one Catalyst aggregation produces the bins
     relation EXTENDED with per-bin exact-stat partials (sum of v*w, min v,
     max v), so the exact summary re-aggregates from bins without a second
-    scan of the raw data; blob assembly walks the sorted bins per group."""
+    scan of the raw data; the blobs are assembled from the sorted bins a
+    batch of whole groups at a time."""
     mapping = config.mapping()
     value = F.col(value_col)
     sign, bucket = sign_bucket(value, mapping)
@@ -563,75 +596,8 @@ def _ddsketch_agg_from_bins(
     out_schema = StructType(list(key_fields) + [StructField("sketch", BinaryType())])
 
     def assemble(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # streaming over key runs (bins arrive repartitioned by key, sorted
-        # by (keys, sign, bucket)); buffers one group's bin arrays at a time
-        cur_key: tuple | None = None
-        sgns: list[np.ndarray] = []
-        bkts: list[np.ndarray] = []
-        cnts: list[np.ndarray] = []
-        stats = [0.0, 0.0, math.inf, -math.inf]  # cnt, sum, min, max
-        out_rows: list[tuple] = []
-
-        def finish() -> None:
-            sgn = np.concatenate(sgns)
-            bkt = np.concatenate(bkts)
-            cnt = np.concatenate(cnts)
-            s = DDSketch(config=config)
-            p = sgn == 1
-            n = sgn == -1
-            s.pos_idx, s.pos_cnt = bkt[p], cnt[p]
-            s.neg_idx, s.neg_cnt = bkt[n], cnt[n]
-            s.zero_count = float(cnt[sgn == 0].sum())
-            s._apply_collapse()
-            s.exact_count = stats[0]
-            s.exact_sum = stats[1]
-            s.exact_min = stats[2]
-            s.exact_max = stats[3]
-            out_rows.append((*cur_key, encode_sketch(s)))
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            key_arrays = [pdf[k].to_numpy() for k in kcols]
-            sgn_a = pdf["sign"].to_numpy()
-            bkt_a = pdf["bucket"].to_numpy(dtype=np.int64)
-            cnt_a = pdf["count"].to_numpy(dtype=np.float64)
-            vw_a = pdf["vw"].to_numpy(dtype=np.float64)
-            mn_a = pdf["mn"].to_numpy(dtype=np.float64)
-            mx_a = pdf["mx"].to_numpy(dtype=np.float64)
-            # find run boundaries within the batch
-            start = 0
-            for i in range(len(pdf) + 1):
-                k = (
-                    _norm_key(a[i] for a in key_arrays)
-                    if i < len(pdf)
-                    else None
-                )
-                if i < len(pdf) and k == cur_key:
-                    continue
-                if i > start:
-                    sl = slice(start, i)
-                    sgns.append(sgn_a[sl])
-                    bkts.append(bkt_a[sl])
-                    cnts.append(cnt_a[sl])
-                    stats[0] += float(cnt_a[sl].sum())
-                    stats[1] += float(vw_a[sl].sum())
-                    stats[2] = min(stats[2], float(mn_a[sl].min()))
-                    stats[3] = max(stats[3], float(mx_a[sl].max()))
-                if i < len(pdf):
-                    if cur_key is not None and k != cur_key and sgns:
-                        finish()
-                        sgns, bkts, cnts = [], [], []
-                        stats = [0.0, 0.0, math.inf, -math.inf]
-                    cur_key = k
-                    start = i
-            if len(out_rows) >= 10000:
-                yield pd.DataFrame(out_rows, columns=kcols + ["sketch"])
-                out_rows = []
-        if cur_key is not None and sgns:
-            finish()
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=kcols + ["sketch"])
+        for frame in _whole_runs(batches, kcols):
+            yield _sketches_from_bins(frame, kcols, config)
 
     if metrics is not None:
         from sketches_go_spark.plans.metrics import instrument_map_in_pandas
@@ -639,10 +605,6 @@ def _ddsketch_agg_from_bins(
         assemble = instrument_map_in_pandas(assemble, metrics)
     shuffled = ext.repartition(*kcols).sortWithinPartitions(*kcols, "sign", "bucket")
     return shuffled.mapInPandas(assemble, schema=out_schema)
-
-
-def _decode(blob) -> DDSketch:
-    return decode_sketch(bytes(blob))
 
 
 def with_quantiles(
@@ -653,21 +615,18 @@ def with_quantiles(
     prefix: str = "p",
     estimate_decimals: int | None = 6,
 ) -> DataFrame:
-    """Append one estimate column per requested quantile (vectorized pandas
-    UDF over the sketch blobs)."""
+    """Append one estimate column per requested quantile.  A pandas UDF
+    decodes each Arrow batch of blobs at once and extracts every quantile
+    of every sketch in one vectorized pass (``DDSketchBatch.quantiles``,
+    value for value ``DDSketch.quantiles``); null or empty sketches give
+    NaN."""
     qs = [float(q) for q in quantiles]
 
     @F.pandas_udf(returnType=StructType(
         [StructField(f"_q{i}", DoubleType()) for i in range(len(qs))]
     ))
     def extract(blobs: pd.Series) -> pd.DataFrame:
-        out = np.full((len(blobs), len(qs)), np.nan)
-        for i, blob in enumerate(blobs):
-            if blob is None:
-                continue
-            s = _decode(blob)
-            if not s.is_empty:
-                out[i] = s.quantiles(qs, clamp_exact=clamp_exact)
+        out = decode_batch(*_blob_buffers(blobs)).quantiles(qs, clamp_exact=clamp_exact)
         return pd.DataFrame({f"_q{i}": out[:, i] for i in range(len(qs))})
 
     def colname(q: float) -> str:
@@ -700,21 +659,16 @@ def with_summary(
         ]
     ))
     def extract(blobs: pd.Series) -> pd.DataFrame:
-        rows = []
-        for blob in blobs:
-            if blob is None:
-                rows.append((np.nan,) * 4)
-                continue
-            s = _decode(blob)
-            rows.append(
-                (
-                    s.exact_count,
-                    s.sum,
-                    s.exact_min if math.isfinite(s.exact_min) else np.nan,
-                    s.exact_max if math.isfinite(s.exact_max) else np.nan,
-                )
-            )
-        return pd.DataFrame(rows, columns=["cnt", "xsum", "xmin", "xmax"])
+        data, offsets, valid = _blob_buffers(blobs)
+        b = decode_batch(data, offsets, valid)
+        out = pd.DataFrame({
+            "cnt": b.exact_count,
+            "xsum": b.exact_sum,
+            "xmin": np.where(np.isfinite(b.exact_min), b.exact_min, np.nan),
+            "xmax": np.where(np.isfinite(b.exact_max), b.exact_max, np.nan),
+        })
+        out[~valid] = np.nan
+        return out
 
     tmp = sketches.withColumn("_s", extract(F.col(sketch_col)))
     for name in ("cnt", "xsum", "xmin", "xmax"):
@@ -997,51 +951,19 @@ def sketch_to_bins(
     kcols = list(keys)
 
     def explode_bins(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # vectorized: per batch, gather each sketch's bin arrays and emit ONE
-        # np.concatenate/np.repeat-built frame (no per-bin python tuples)
+        # one batch decode per Arrow batch: the bins are already flat, each
+        # sketch's nonzero zero count adds one (sign 0, bucket 0) row
         for pdf in batches:
-            row_ids: list[int] = []
-            sizes: list[int] = []
-            signs: list[np.ndarray] = []
-            buckets: list[np.ndarray] = []
-            counts: list[np.ndarray] = []
-            for i in range(len(pdf)):
-                blob = pdf[sketch_col].iloc[i]
-                if blob is None:
-                    continue
-                s = decode_sketch(bytes(blob))
-                nz = 1 if s.zero_count else 0
-                total = s.pos_idx.size + s.neg_idx.size + nz
-                if total == 0:
-                    continue
-                signs.append(
-                    np.concatenate(
-                        [
-                            np.ones(s.pos_idx.size, dtype=np.int32),
-                            np.full(s.neg_idx.size, -1, dtype=np.int32),
-                            np.zeros(nz, dtype=np.int32),
-                        ]
-                    )
-                )
-                buckets.append(
-                    np.concatenate(
-                        [s.pos_idx, s.neg_idx, np.zeros(nz, dtype=np.int64)]
-                    ).astype(np.int32)
-                )
-                counts.append(
-                    np.concatenate(
-                        [s.pos_cnt, s.neg_cnt, np.full(nz, float(s.zero_count))]
-                    )
-                )
-                row_ids.append(i)
-                sizes.append(total)
-            if not sizes:
+            b = decode_batch(*_blob_buffers(pdf[sketch_col]))
+            has_zero = np.flatnonzero(b.zero_count != 0)
+            row = np.concatenate([np.repeat(np.arange(b.size), np.diff(b.offsets)), has_zero])
+            if row.size == 0:
                 continue
-            rep = np.repeat(np.asarray(row_ids), np.asarray(sizes))
-            out = pd.DataFrame({k: pdf[k].to_numpy()[rep] for k in kcols})
-            out["sign"] = np.concatenate(signs)
-            out["bucket"] = np.concatenate(buckets)
-            out["count"] = np.concatenate(counts)
+            order = np.argsort(row, kind="stable")
+            out = pd.DataFrame({k: pdf[k].to_numpy()[row[order]] for k in kcols})
+            out["sign"] = np.concatenate([b.sign, np.zeros(has_zero.size, np.int8)]).astype(np.int32)[order]
+            out["bucket"] = np.concatenate([b.index, np.zeros(has_zero.size, np.int64)]).astype(np.int32)[order]
+            out["count"] = np.concatenate([b.count, b.zero_count[has_zero]])[order]
             yield out
 
     return sketches.mapInPandas(explode_bins, schema=out_schema)

@@ -189,24 +189,6 @@ def langid_markers(df: DataFrame, text_col: str | Column = "text") -> DataFrame:
     return df.withColumn("lang_pred", out)
 
 
-def langid_markers_sql(text_expr: str) -> str:
-    padded = f"concat(' ', lower(trim({text_expr})), ' ')"
-    score_exprs = {
-        lang: " + ".join(
-            occurrences_sql(padded, f" {w} ") for w in LANG_MARKERS[lang]
-        )
-        for lang in sorted(LANG_MARKERS)
-    }
-    best = "greatest(" + ", ".join(f"({s})" for s in score_exprs.values()) + ")"
-    pick = "'und'"
-    for lang in sorted(LANG_MARKERS, reverse=True):
-        pick = f"CASE WHEN ({score_exprs[lang]}) = sgs_best THEN '{lang}' ELSE {pick} END"
-    return (
-        f"CASE WHEN sgs_best > 0 THEN {pick} ELSE 'und' END",
-        best,
-    )
-
-
 # trigram-profile scorer (production path for real text): vectorized pandas
 _PROFILES = {
     "en": (" th", "the", "he ", " an", "and", "nd ", " of", "ing", "ng "),

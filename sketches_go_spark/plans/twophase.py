@@ -91,12 +91,3 @@ def salted_rows_ddsketch_agg(
     )
     level1 = ddsketch_partial(salted, value_col, [*keys, "_salt"], config, weight_col)
     return ddsketch_merge(level1.drop("_salt"), list(keys), config)
-
-
-def explain_shuffles(df: DataFrame) -> str:
-    """Debug helper: the executed plan's exchange nodes (what actually
-    shuffles, with partitioning) — use while tuning."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return "\n".join(
-        line for line in plan.splitlines() if "Exchange" in line or "Scan" in line
-    )

@@ -232,7 +232,7 @@ def test_per_task_metrics(spark, skewed):
 
     sdf, pdf = skewed
     mc = TaskMetricsCollector(spark, name="test-job")
-    dd.ddsketch_agg(sdf, "v", ["g"], CFG, metrics=mc).count()
+    dd.ddsketch_agg(sdf, "v", ["g"], CFG, strategy="combine", metrics=mc).count()
     recs = mc.records()
     assert len(recs) >= 2  # at least partial tasks + merge tasks
     frame = mc.to_frame()

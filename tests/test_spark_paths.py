@@ -189,9 +189,9 @@ def test_pair_operators_use_equality_joins(spark):
 
 
 def test_ddsketch_agg_bins_strategy_parity(spark):
-    """strategy='bins' (relational bins + blob assembly, single scan with
-    bin-level exact-stat partials) must agree with strategy='combine' on
-    every bin, the zero count, and the exact summary."""
+    """strategy='bins' (the default: relational bins + blob assembly, single
+    scan with bin-level exact-stat partials) must agree with
+    strategy='combine' on every bin, the zero count, and the exact summary."""
     import pandas as pd
 
     from sketches_go_spark.core.encoding import decode_sketch
@@ -211,13 +211,13 @@ def test_ddsketch_agg_bins_strategy_parity(spark):
     sdf = spark.createDataFrame(pdf).repartition(8)
     combine = {
         tuple(r[:1]): decode_sketch(bytes(r["sketch"]))
-        for r in dd.ddsketch_agg(sdf, "v", ["g"], CFG, weight_col="w").collect()
+        for r in dd.ddsketch_agg(
+            sdf, "v", ["g"], CFG, weight_col="w", strategy="combine"
+        ).collect()
     }
     bins = {
         tuple(r[:1]): decode_sketch(bytes(r["sketch"]))
-        for r in dd.ddsketch_agg(
-            sdf, "v", ["g"], CFG, weight_col="w", strategy="bins"
-        ).collect()
+        for r in dd.ddsketch_agg(sdf, "v", ["g"], CFG, weight_col="w").collect()
     }
     assert combine.keys() == bins.keys() and len(bins) == 4
     for k in combine:
@@ -251,7 +251,7 @@ def test_bins_strategy_group_spans_arrow_batches(spark):
         assert len(rows) == 2
         ref = {
             r["g"]: decode_sketch(bytes(r["sketch"]))
-            for r in dd.ddsketch_agg(sdf, "v", ["g"], CFG).collect()
+            for r in dd.ddsketch_agg(sdf, "v", ["g"], CFG, strategy="combine").collect()
         }
         for r in rows:
             got = decode_sketch(bytes(r["sketch"]))
@@ -261,6 +261,102 @@ def test_bins_strategy_group_spans_arrow_batches(spark):
             assert got.exact_count == pytest.approx(want.exact_count)
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
+def _decoded(df, key):
+    from sketches_go_spark.core.encoding import decode_sketch
+
+    return {r[key]: decode_sketch(bytes(r["sketch"])) for r in df.collect()}
+
+
+def _assert_same_build(got, want):
+    """Same bins, zero count, count, min and max; the exact sum (float
+    additions in another order) within rel 1e-9."""
+    assert got.keys() == want.keys()
+    for k, w in want.items():
+        g = got[k]
+        assert np.array_equal(g.pos_idx, w.pos_idx) and np.array_equal(g.neg_idx, w.neg_idx)
+        assert np.array_equal(g.pos_cnt, w.pos_cnt) and np.array_equal(g.neg_cnt, w.neg_cnt)
+        assert g.zero_count == w.zero_count and g.exact_count == w.exact_count
+        assert g.exact_min == w.exact_min and g.exact_max == w.exact_max
+        assert g.sum == pytest.approx(w.sum, rel=1e-9, abs=1e-12)
+
+
+@pytest.fixture(scope="module")
+def many_groups(spark):
+    """3000 groups of ~13 values, a null-key group and one ~1400-bucket
+    group, split over 8 partitions."""
+    rng = np.random.default_rng(43)
+    n = 40000
+    g = rng.integers(0, 3000, n).astype(str).astype(object)
+    g[rng.choice(n, 300, replace=False)] = None
+    v = np.concatenate([rng.lognormal(1, 2, n // 2), -rng.exponential(3, n // 2)])
+    v[rng.choice(n, 300, replace=False)] = 0.0
+    g[:4000] = "wide"
+    v[:4000] = 1.02 ** (np.arange(4000) % 1400)
+    pdf = pd.DataFrame({"g": g, "v": v, "w": rng.integers(1, 4, n).astype(float)})
+    return spark.createDataFrame(pdf).repartition(8)
+
+
+def test_default_build_high_cardinality_matches_combine(spark, many_groups):
+    """The default build at thousands of groups, with Arrow batches of 97
+    rows so groups (the null-key one and a 1400-bucket one among them)
+    span batches, decodes to the same sketches as strategy='combine'."""
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "97")
+    try:
+        got = _decoded(dd.ddsketch_agg(many_groups, "v", ["g"], CFG, weight_col="w"), "g")
+        want = _decoded(
+            dd.ddsketch_agg(many_groups, "v", ["g"], CFG, weight_col="w", strategy="combine"), "g"
+        )
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    assert len(want) == 3002 and None in want and want["wide"].pos_idx.size > 1000
+    _assert_same_build(got, want)
+
+
+def test_partial_flush_bounds_groups_and_merge_restores(spark, many_groups):
+    """A tiny flush_groups (200 buffered bin rows, two 97-row Arrow
+    batches) makes each task emit several partials per group; the merge
+    folds them back into the unflushed result."""
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "97")
+    try:
+        parts = dd.ddsketch_partial(many_groups, "v", ["g"], CFG, "w", flush_groups=50)
+        plain = dd.ddsketch_partial(many_groups, "v", ["g"], CFG, "w", flush_groups=10**9)
+        assert parts.count() > plain.count()
+        got = _decoded(dd.ddsketch_merge(parts, ["g"], CFG), "g")
+        want = _decoded(dd.ddsketch_merge(plain, ["g"], CFG), "g")
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    _assert_same_build(got, want)
+
+
+def test_with_quantiles_batch_matches_core(spark, many_groups):
+    """with_quantiles (one vectorized pass per Arrow batch) equals
+    DDSketch.quantiles value for value, with and without clamp_exact; a
+    null blob gives NaN."""
+    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
+
+    qs = [0.0, 0.1, 0.5, 0.99, 1.0]
+    sk = dd.ddsketch_agg(many_groups, "v", ["g"], CFG, weight_col="w")
+    core = _decoded(sk, "g")
+    null = spark.createDataFrame(
+        [("null-blob", None)],
+        StructType([StructField("g", StringType()), StructField("sketch", BinaryType())]),
+    )
+    for clamp in (False, True):
+        out = dd.with_quantiles(
+            sk.unionByName(null), qs, clamp_exact=clamp, estimate_decimals=None
+        ).toPandas()
+        cols = [c for c in out.columns if c.startswith("p")]
+        assert len(out) == len(core) + 1
+        for row in out.itertuples(index=False):
+            got = np.array([getattr(row, c) for c in cols])
+            if row.g == "null-blob":
+                assert np.isnan(got).all()
+                continue
+            assert np.array_equal(got, core[row.g].quantiles(qs, clamp_exact=clamp))
 
 
 def test_bins_psi_identity_and_shift(spark):
