@@ -589,52 +589,6 @@ class DDSketchBatch:
         starts = self.offsets[:-1]
         return starts, n_neg, starts + n_neg, lens - n_neg
 
-    @classmethod
-    def from_sketches(cls, sketches: list) -> "DDSketchBatch":
-        """Columnar copy of DDSketch objects."""
-        mappings: list = []
-        mapping_id = np.empty(len(sketches), dtype=np.int64)
-        for g, s in enumerate(sketches):
-            mid = next((i for i, m in enumerate(mappings) if m.equals(s.mapping)), None)
-            if mid is None:
-                mid = len(mappings)
-                mappings.append(s.mapping)
-            mapping_id[g] = mid
-        stores = [(s.neg_idx, s.neg_cnt, s.pos_idx, s.pos_cnt) for s in sketches]
-        sizes = [st[0].size + st[2].size for st in stores]
-        return cls(
-            offsets=np.concatenate([[0], np.cumsum(sizes)]).astype(np.int64),
-            sign=np.concatenate(
-                [_EMPTY_IDX.astype(np.int8)]
-                + [np.repeat(np.int8([-1, 1]), [st[0].size, st[2].size]) for st in stores]
-            ),
-            index=np.concatenate([_EMPTY_IDX] + [x for st in stores for x in (st[0], st[2])]),
-            count=np.concatenate([_EMPTY_CNT] + [x for st in stores for x in (st[1], st[3])]),
-            zero_count=np.array([s.zero_count for s in sketches], dtype=np.float64),
-            exact_count=np.array([s.exact_count for s in sketches], dtype=np.float64),
-            exact_sum=np.array([s.sum for s in sketches], dtype=np.float64),
-            exact_min=np.array([s.exact_min for s in sketches], dtype=np.float64),
-            exact_max=np.array([s.exact_max for s in sketches], dtype=np.float64),
-            mappings=mappings,
-            mapping_id=mapping_id,
-        )
-
-    def sketch(self, g: int, config: DDSketchConfig | None = None) -> DDSketch:
-        """Sketch ``g`` as a DDSketch object (no collapse applied)."""
-        m = self.mappings[self.mapping_id[g]]
-        cfg = config or DDSketchConfig(alpha=m.relative_accuracy(), interpolation=m.interpolation)
-        s = DDSketch(config=cfg, mapping=m)
-        sl = slice(self.offsets[g], self.offsets[g + 1])
-        sg, ix, ct = self.sign[sl], self.index[sl], self.count[sl]
-        s.neg_idx, s.neg_cnt = ix[sg < 0], ct[sg < 0]
-        s.pos_idx, s.pos_cnt = ix[sg > 0], ct[sg > 0]
-        s.zero_count = float(self.zero_count[g])
-        s.exact_count = float(self.exact_count[g])
-        s.exact_sum = float(self.exact_sum[g])
-        s.exact_min = float(self.exact_min[g])
-        s.exact_max = float(self.exact_max[g])
-        return s
-
     def collapsed(self, config: DDSketchConfig) -> "DDSketchBatch":
         """Every sketch's ``_apply_collapse`` under ``config`` at once: a
         store over ``max_bins`` folds its buckets into the kept range's edge

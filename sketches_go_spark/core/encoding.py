@@ -502,9 +502,10 @@ def encode_batch(batch: DDSketchBatch) -> tuple[np.ndarray, np.ndarray]:
     """Serialize every sketch of ``batch`` into one ``uint8`` buffer.
 
     Returns ``(data, offsets)``: blob ``g`` is ``data[offsets[g]:offsets[g+1]]``,
-    byte-identical to ``encode_sketch(batch.sketch(g))`` (index mapping and
-    exact stats included).  Each store is priced for the three encodings
-    with segment sums, the same way ``_encode_store`` prices one store.
+    byte-identical to ``encode_sketch`` of the DDSketch holding sketch
+    ``g``'s bins, zero count, exact stats and index mapping.  Each store is
+    priced for the three encodings with segment sums, the same way
+    ``_encode_store`` prices one store.
     Bucket indexes must differ by less than 2**63 within a store (any
     mapping's int32 range does)."""
     n_groups = batch.size

@@ -17,9 +17,9 @@ serialization of that tiny bins relation, assembled a batch of whole
 groups at a time), ``combine`` (vectorized ``mapInPandas`` partial per input
 partition — map-side combine the Arrow way — then a shuffle of the tiny
 partials and a STREAMING sorted-run merge) and ``repartition`` (raw shuffle
-once, build in place).  Python never walks bins or rows one by one: blobs
-are written, read and queried a whole Arrow batch at a time
-(``core.encoding.encode_batch`` / ``decode_batch``,
+once, each group built in place, no merge).  Python never walks bins or
+rows one by one: blobs are written, read and queried a whole Arrow batch
+at a time (``core.encoding.encode_batch`` / ``decode_batch``,
 ``DDSketchBatch.quantiles``).  Needed for bounded-memory collapsing
 semantics, sketch-as-a-column storage/rollup, streaming state and
 checkpointed resume.  The blob is the reference-compatible binary format
@@ -36,6 +36,7 @@ dense_store.go:153-165; MergeWith ddsketch.go:302-310.
 
 from __future__ import annotations
 
+import math
 from typing import Iterable, Iterator, Sequence
 
 import numpy as np
@@ -362,6 +363,11 @@ def _sketches_from_bins(frame: pd.DataFrame, kcols: Sequence[str], config: DDSke
     return _sketch_rows(frame, starts, kcols, batch.collapsed(config))
 
 
+# Buffered bin rows at which a partial build emits its blobs (an upper
+# bound on the groups held, like hll_agg's 4 x flush_groups register rows).
+_FLUSH_BIN_ROWS = 200_000
+
+
 def ddsketch_partial(
     df: DataFrame,
     value_col: str,
@@ -369,7 +375,6 @@ def ddsketch_partial(
     config: DDSketchConfig | None = None,
     weight_col: str | None = None,
     metrics=None,
-    flush_groups: int = 50_000,
 ) -> DataFrame:
     """Phase 1: partial sketches per (group x input-partition), built
     inside ``mapInPandas`` — the Arrow-side equivalent of map-side combine
@@ -378,14 +383,30 @@ def ddsketch_partial(
     Each Arrow batch reduces to an extended bins relation, (group, sign,
     bucket) → count, sum of v*w, min v, max v, with one C-path pandas
     groupby.  Buffered bins are bounded like ``hll_agg``'s: at
-    ``4 x flush_groups`` bin rows (an upper bound on the groups) they are
-    re-aggregated and emitted as blobs through the batch encoder, and the
-    merge stage folds a group's several partials.  Per-task memory is
-    O(flush_groups) whatever the key cardinality.
+    ``_FLUSH_BIN_ROWS`` bin rows they are re-aggregated and emitted as
+    blobs through the batch encoder, and the merge stage folds a group's
+    several partials.  Per-task memory is bounded whatever the key
+    cardinality.
 
     Output: (keys..., sketch: binary).
     """
-    config = config or DDSketchConfig()
+    return _pandas_build(
+        df, value_col, keys, config or DDSketchConfig(), weight_col, metrics, _FLUSH_BIN_ROWS
+    )
+
+
+def _pandas_build(
+    df: DataFrame,
+    value_col: str,
+    keys: Sequence[str],
+    config: DDSketchConfig,
+    weight_col: str | None,
+    metrics,
+    flush_rows: float,
+) -> DataFrame:
+    """The mapInPandas sketch build: blobs of the buffered extended bins,
+    emitted whenever ``flush_rows`` bin rows are buffered and at the end
+    of the partition."""
     mapping = config.mapping()
     key_fields = [df.schema[k] for k in keys]
     out_schema = StructType(list(key_fields) + [StructField("sketch", BinaryType())])
@@ -456,7 +477,7 @@ def ddsketch_partial(
                 part[k] = uniqs[k].take(part[c].to_numpy())
             parts.append(part[[*kcols, "sign", "bucket", "count", "vw", "mn", "mx"]])
             buffered += len(part)
-            if buffered >= flush_groups * 4:
+            if buffered >= flush_rows:
                 yield drain(parts)
                 parts, buffered = [], 0
         if parts:
@@ -474,19 +495,17 @@ def ddsketch_merge(
     keys: Sequence[str],
     config: DDSketchConfig | None = None,
     metrics=None,
-    co_located: bool = False,
 ) -> DataFrame:
     """Phase 2: shuffle the (tiny) partials by group key and merge
     (MergeWith semantics, ddsketch.go:302-310).
 
-    Implemented as repartition-by-key (skipped when ``co_located``) +
-    sortWithinPartitions + a streaming mapInPandas pass — NOT applyInPandas,
-    whose per-group invocation costs ~1 ms and dominates at high key
-    cardinality.  Each batch of whole key runs is decoded at once
-    (``decode_batch``), merged run by run (``DDSketchBatch.merge_runs``:
-    bins, counts and the Kahan sum exactly as ``DDSketch.merge`` in partial
-    order; a collapsing config folds each run's union once) and re-encoded
-    at once."""
+    Implemented as repartition-by-key + sortWithinPartitions + a streaming
+    mapInPandas pass — NOT applyInPandas, whose per-group invocation costs
+    ~1 ms and dominates at high key cardinality.  Each batch of whole key
+    runs is decoded at once (``decode_batch``), merged run by run
+    (``DDSketchBatch.merge_runs``: bins, counts and the Kahan sum exactly
+    as ``DDSketch.merge`` in partial order; a collapsing config folds each
+    run's union once) and re-encoded at once."""
     config = config or DDSketchConfig()
     key_fields = [partials.schema[k] for k in keys]
     out_schema = StructType(list(key_fields) + [StructField("sketch", BinaryType())])
@@ -502,8 +521,8 @@ def ddsketch_merge(
         from sketches_go_spark.plans.metrics import instrument_map_in_pandas
 
         merge_stream = instrument_map_in_pandas(merge_stream, metrics)
-    shuffled = partials if co_located else partials.repartition(*kcols)
-    return shuffled.sortWithinPartitions(*kcols).mapInPandas(merge_stream, schema=out_schema)
+    shuffled = partials.repartition(*kcols).sortWithinPartitions(*kcols)
+    return shuffled.mapInPandas(merge_stream, schema=out_schema)
 
 
 def ddsketch_agg(
@@ -526,7 +545,7 @@ def ddsketch_agg(
     across batches.  Arrow ships ``groups x buckets`` bin rows to Python
     instead of every raw row.  On the benchmark's per_conv workload (~2k
     groups of ~10 values, 4 cores) ``ddsketch_agg`` → ``with_quantiles``
-    takes ~43 % less CPU than with 'combine' as the default and the
+    takes ~44 % less CPU than with 'combine' as the default and the
     per-sketch codec (README "UDAF blobs" has the A/B).
 
     strategy='combine': two-phase partial-per-partition → shuffle tiny
@@ -534,14 +553,16 @@ def ddsketch_agg(
     ~groups x partitions blobs when groups repeat within input partitions.
 
     strategy='repartition': shuffle the raw (keys, value) rows once so each
-    group lands wholly in one partition, build the sketches there and merge
-    a group's flushed partials in place (no second shuffle)."""
+    group lands wholly in one partition, then build the final sketches
+    there in one pass — no merge stage, no decode.  A task holds its
+    partition's bins until the partition ends."""
     config = config or DDSketchConfig()
     if strategy == "repartition":
         cols = [value_col] + ([weight_col] if weight_col else [])
         shuffled = df.select(*keys, *cols).repartition(*keys)
-        partials = ddsketch_partial(shuffled, value_col, keys, config, weight_col, metrics)
-        return ddsketch_merge(partials, keys, config, metrics, co_located=True)
+        # each group is whole in one task, so the build never flushes and
+        # needs no merge stage
+        return _pandas_build(shuffled, value_col, keys, config, weight_col, metrics, math.inf)
     if strategy == "combine":
         return ddsketch_merge(
             ddsketch_partial(df, value_col, keys, config, weight_col, metrics),

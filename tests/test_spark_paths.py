@@ -298,14 +298,18 @@ def many_groups(spark):
     return spark.createDataFrame(pdf).repartition(8)
 
 
-def test_default_build_high_cardinality_matches_combine(spark, many_groups):
-    """The default build at thousands of groups, with Arrow batches of 97
-    rows so groups (the null-key one and a 1400-bucket one among them)
-    span batches, decodes to the same sketches as strategy='combine'."""
+@pytest.mark.parametrize("strategy", ["bins", "repartition"])
+def test_build_high_cardinality_matches_combine(spark, many_groups, strategy):
+    """The default build and the repartition build at thousands of
+    groups, with Arrow batches of 97 rows so groups (the null-key one and
+    a 1400-bucket one among them) span batches, decode to the same
+    sketches as strategy='combine'."""
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "97")
     try:
-        got = _decoded(dd.ddsketch_agg(many_groups, "v", ["g"], CFG, weight_col="w"), "g")
+        got = _decoded(
+            dd.ddsketch_agg(many_groups, "v", ["g"], CFG, weight_col="w", strategy=strategy), "g"
+        )
         want = _decoded(
             dd.ddsketch_agg(many_groups, "v", ["g"], CFG, weight_col="w", strategy="combine"), "g"
         )
@@ -315,15 +319,17 @@ def test_default_build_high_cardinality_matches_combine(spark, many_groups):
     _assert_same_build(got, want)
 
 
-def test_partial_flush_bounds_groups_and_merge_restores(spark, many_groups):
-    """A tiny flush_groups (200 buffered bin rows, two 97-row Arrow
+def test_partial_flush_bounds_groups_and_merge_restores(spark, many_groups, monkeypatch):
+    """A tiny flush bound (200 buffered bin rows, two 97-row Arrow
     batches) makes each task emit several partials per group; the merge
     folds them back into the unflushed result."""
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "97")
     try:
-        parts = dd.ddsketch_partial(many_groups, "v", ["g"], CFG, "w", flush_groups=50)
-        plain = dd.ddsketch_partial(many_groups, "v", ["g"], CFG, "w", flush_groups=10**9)
+        monkeypatch.setattr(dd, "_FLUSH_BIN_ROWS", 200)
+        parts = dd.ddsketch_partial(many_groups, "v", ["g"], CFG, "w")
+        monkeypatch.setattr(dd, "_FLUSH_BIN_ROWS", 10**9)
+        plain = dd.ddsketch_partial(many_groups, "v", ["g"], CFG, "w")
         assert parts.count() > plain.count()
         got = _decoded(dd.ddsketch_merge(parts, ["g"], CFG), "g")
         want = _decoded(dd.ddsketch_merge(plain, ["g"], CFG), "g")
