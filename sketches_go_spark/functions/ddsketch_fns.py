@@ -324,11 +324,13 @@ def _blob_buffers(blobs: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]
     return data, offsets, ~arr.is_null().to_numpy(zero_copy_only=False)
 
 
-def _sketch_rows(frame: pd.DataFrame, starts: np.ndarray, kcols: Sequence[str], batch: DDSketchBatch) -> pd.DataFrame:
-    """(keys..., sketch) rows: the key of each run start and its blob."""
-    data, offsets = encode_batch(batch)
+def _sketch_rows(
+    frame: pd.DataFrame, starts: np.ndarray, kcols: Sequence[str], data: np.ndarray, offsets: np.ndarray
+) -> pd.DataFrame:
+    """(keys..., sketch) rows: the key of each run start and its blob, the
+    blobs given as one byte buffer and its int64 offsets."""
     blobs = pa.Array.from_buffers(
-        pa.large_binary(), batch.size, [None, pa.py_buffer(offsets), pa.py_buffer(data)]
+        pa.large_binary(), starts.size, [None, pa.py_buffer(offsets), pa.py_buffer(data)]
     )
     out = pd.DataFrame({k: frame[k].to_numpy()[starts] for k in kcols})
     out["sketch"] = blobs.to_numpy(zero_copy_only=False)
@@ -360,11 +362,11 @@ def _sketches_from_bins(frame: pd.DataFrame, kcols: Sequence[str], config: DDSke
         mappings=[config.mapping()],
         mapping_id=np.zeros(n_groups, dtype=np.int64),
     )
-    return _sketch_rows(frame, starts, kcols, batch.collapsed(config))
+    return _sketch_rows(frame, starts, kcols, *encode_batch(batch.collapsed(config)))
 
 
 # Buffered bin rows at which a partial build emits its blobs (an upper
-# bound on the groups held, like hll_agg's 4 x flush_groups register rows).
+# bound on the groups held).
 _FLUSH_BIN_ROWS = 200_000
 
 
@@ -382,10 +384,9 @@ def ddsketch_partial(
 
     Each Arrow batch reduces to an extended bins relation, (group, sign,
     bucket) → count, sum of v*w, min v, max v, with one C-path pandas
-    groupby.  Buffered bins are bounded like ``hll_agg``'s: at
-    ``_FLUSH_BIN_ROWS`` bin rows they are re-aggregated and emitted as
-    blobs through the batch encoder, and the merge stage folds a group's
-    several partials.  Per-task memory is bounded whatever the key
+    groupby.  At ``_FLUSH_BIN_ROWS`` buffered bin rows the bins are
+    re-aggregated and emitted as blobs through the batch encoder, and the
+    merge stage folds a group's several partials.  Per-task memory is bounded whatever the key
     cardinality.
 
     Output: (keys..., sketch: binary).
@@ -515,7 +516,7 @@ def ddsketch_merge(
         for frame in _whole_runs(batches, kcols):
             starts = _run_starts(frame, kcols)
             batch = decode_batch(*_blob_buffers(frame["sketch"]), config=config)
-            yield _sketch_rows(frame, starts, kcols, batch.merge_runs(starts).collapsed(config))
+            yield _sketch_rows(frame, starts, kcols, *encode_batch(batch.merge_runs(starts).collapsed(config)))
 
     if metrics is not None:
         from sketches_go_spark.plans.metrics import instrument_map_in_pandas

@@ -4,15 +4,20 @@ t-digest) — same two-path design as DDSketch:
 - **relational paths** (HLL registers, CMS counters, Bloom bit sets) are pure
   Catalyst: hash → modulo → groupBy, map-side combined, Python-free, and
   exactly reproducible in DuckDB (the oracle replays the identical hash);
-- **UDAF paths** produce the sketch as an encoded BinaryType value via the
-  explicit two-phase mapInPandas-partial → shuffle-of-tiny-blobs → streaming
-  mapInPandas merge topology (shared template ``two_phase_agg`` — the same
-  repartition+sortWithinPartitions+streaming-merge shape as
-  ``ddsketch_fns.ddsketch_merge``), for rollups / storage / streaming state.
+- **blob paths** (``hll_agg``, ``cms_agg``, ``bloom_agg``) serialize that
+  same relation: it is sorted by key and one ``mapInPandas`` assembler
+  writes each Arrow batch of whole key runs as blobs with one numpy
+  scatter (:func:`_serialize_runs`), so a blob is the relation, never a
+  second build of its monoid;
+- **rank sketches** (KLL, t-digest) have no relational form and build as
+  partial-per-partition → shuffle of tiny blobs → streaming merge
+  (:func:`two_phase_agg`); :func:`two_phase_merge` also merges stored
+  blobs of any of these sketches.
 """
 
 from __future__ import annotations
 
+import struct
 from typing import Callable, Iterator, Sequence
 
 import numpy as np
@@ -28,12 +33,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from sketches_go_spark.core.bloom import BloomFilter, bloom_salt
-from sketches_go_spark.core.cms import CountMinSketch, cms_salt
+from sketches_go_spark.core.bloom import bloom_salt
+from sketches_go_spark.core.cms import cms_salt
 from sketches_go_spark.core.hashing import HASH_BITS
 from sketches_go_spark.core.hll import HyperLogLog, hll_alpha
 from sketches_go_spark.core.kll import KLLSketch
 from sketches_go_spark.core.tdigest import TDigest
+from sketches_go_spark.functions.ddsketch_fns import _run_starts, _sketch_rows, _whole_runs
 from sketches_go_spark.functions.expressions import portable_hash64
 
 
@@ -42,16 +48,51 @@ def _col(c: str | Column) -> Column:
 
 
 # =====================================================================
-# generic two-phase UDAF template (partial per partition -> merge)
+# blobs of a monoid relation; generic two-phase UDAF template
 # =====================================================================
-def _norm_key(vals) -> tuple:
-    """Run-comparison key: NaN (which never equals itself) normalized to None
-    so a null-keyed group merges into ONE run instead of one row per partial
-    (nulls/NaNs sort together in sortWithinPartitions, so runs ARE contiguous
-    — only the equality check needs the normalization)."""
-    return tuple(
-        None if (isinstance(v, float) and v != v) else v for v in vals
+def _serialize_runs(
+    rel: DataFrame,
+    keys: Sequence[str],
+    header: bytes,
+    body_bytes: int,
+    fill: Callable[[np.ndarray, pd.DataFrame, np.ndarray], None],
+) -> DataFrame:
+    """(keys..., sketch) from a sketch's Catalyst relation: one blob per
+    group, ``header`` then ``body_bytes`` of payload.
+
+    The relation is repartitioned and sorted by key, and one mapInPandas
+    pass walks whole key runs (``ddsketch_fns._whole_runs``: one Arrow batch
+    plus one carried group per task).  Per batch ``fill(body, frame,
+    group)`` scatters the relation's rows into the zeroed (groups x
+    body_bytes) uint8 matrix, ``group`` giving each row's run.  Each cell of
+    a group appears once in the relation, so the sort is on the keys
+    alone."""
+    kcols = list(keys)
+    out_schema = StructType(
+        [rel.schema[k] for k in kcols] + [StructField("sketch", BinaryType())]
     )
+    head = np.frombuffer(header, dtype=np.uint8)
+    width = head.size + body_bytes
+
+    def assemble(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for frame in _whole_runs(batches, kcols):
+            starts = _run_starts(frame, kcols)
+            group = np.repeat(np.arange(starts.size), np.diff(np.append(starts, len(frame))))
+            blobs = np.zeros((starts.size, width), dtype=np.uint8)
+            blobs[:, : head.size] = head
+            fill(blobs[:, head.size :], frame, group)
+            offsets = np.arange(starts.size + 1, dtype=np.int64) * width
+            yield _sketch_rows(frame, starts, kcols, blobs.ravel(), offsets)
+
+    return rel.repartition(*kcols).sortWithinPartitions(*kcols).mapInPandas(
+        assemble, schema=out_schema
+    )
+
+
+# Distinct groups a two_phase_agg partial build holds before it emits them
+# as partial blobs (the merge stage folds a group's several partials), so a
+# task's memory is bounded whatever the key cardinality.
+_FLUSH_GROUPS = 50_000
 
 
 def two_phase_agg(
@@ -62,35 +103,17 @@ def two_phase_agg(
     partial_add: Callable[[object, dict], None],
     decode: Callable[[bytes], object],
     out_col: str = "sketch",
-    strategy: str = "combine",
-    flush_groups: int = 50_000,
 ) -> DataFrame:
     """Shared topology for mergeable sketches whose partial build is a
     per-group object update (KLL / t-digest — rank sketches with
-    order-sensitive internal state).  HLL / CMS / Bloom use fully vectorized
-    builders instead (see hll_agg / cms_agg / bloom_agg) and share only
-    :func:`two_phase_merge`.  Sketch objects must expose ``.merge()`` and
-    ``.to_bytes()``.
+    order-sensitive internal state and no relational form).  HLL / CMS /
+    Bloom serialize their Catalyst relations instead (:func:`_serialize_runs`).
+    Sketch objects must expose ``.merge()`` and ``.to_bytes()``.
 
-    strategy='combine' (default): one partial sketch per (group x input
-    partition) built batch-wise in mapInPandas (map-side combine), shuffle of
-    the tiny encoded partials keyed on the group, then a STREAMING merge —
-    repartition + sortWithinPartitions + a single mapInPandas pass that walks
-    the sorted partials and emits one sketch per key run.  Same topology as
-    ``ddsketch_fns.ddsketch_merge``: per-group invocation cost is one Python
-    decode per partial row, not the ~1 ms applyInPandas per-group call that
-    dominates at 10^5+ keys.
-
-    strategy='repartition': shuffle the raw rows once so each group lands
-    wholly in one partition, build partials there, and merge locally
-    (sortWithinPartitions only — no second shuffle).  Optimal at high key
-    cardinality where map-side combine finds nothing to combine.
-
-    ``flush_groups`` bounds the partial-build dict: when a task has
-    accumulated that many distinct groups it flushes them as partial rows and
-    starts fresh (the merge stage tolerates multiple partials per group), so
-    per-task memory is O(flush_groups x sketch size) regardless of key
-    cardinality.
+    One partial sketch per (group x input partition) is built batch-wise in
+    mapInPandas (map-side combine); the tiny encoded partials shuffle on
+    the group key into :func:`two_phase_merge`.  A task emits its partials
+    whenever it holds ``_FLUSH_GROUPS`` groups.
 
     ``partial_add`` receives a dict of numpy column views for the group's
     rows (NOT a DataFrame slice): fancy-indexed ndarray views cost ~1-2 us
@@ -110,29 +133,23 @@ def two_phase_agg(
             ]
             return pd.DataFrame(rows, columns=kcols + [out_col])
 
-        data_cols = [c for c in cols]
         for pdf in batches:
             if pdf.empty:
                 continue
-            arrs = {c: pdf[c].to_numpy() for c in data_cols}
+            arrs = {c: pdf[c].to_numpy() for c in cols}
             for gkey, idx in pdf.groupby(kcols, dropna=False, sort=False).indices.items():
                 s = acc.get(gkey)
                 if s is None:
                     s = acc[gkey] = make()
                 partial_add(s, {c: a[idx] for c, a in arrs.items()})
-            if len(acc) >= flush_groups:
+            if len(acc) >= _FLUSH_GROUPS:
                 yield drain()
                 acc = {}
         if acc:
             yield drain()
 
-    src = df.select(*keys, *cols)
-    if strategy == "repartition":
-        src = src.repartition(*kcols)
-    partials = src.mapInPandas(build, schema=out_schema)
-    return two_phase_merge(
-        partials, keys, decode, out_col, co_located=(strategy == "repartition")
-    )
+    partials = df.select(*keys, *cols).mapInPandas(build, schema=out_schema)
+    return two_phase_merge(partials, keys, decode, out_col)
 
 
 def two_phase_merge(
@@ -140,46 +157,31 @@ def two_phase_merge(
     keys: Sequence[str],
     decode: Callable[[bytes], object],
     out_col: str = "sketch",
-    co_located: bool = False,
 ) -> DataFrame:
-    """Shared merge stage: shuffle the tiny encoded partials by group key
-    (skipped when ``co_located`` — the build stage already repartitioned the
-    raw rows), sort within partitions, and walk the sorted runs in one
-    streaming mapInPandas pass."""
+    """Shared merge stage: shuffle the encoded partials by group key, sort
+    within partitions, and fold each key run (``ddsketch_fns._whole_runs``)
+    in one streaming mapInPandas pass — the same shape as
+    ``ddsketch_fns.ddsketch_merge``, one Python decode per partial row
+    rather than applyInPandas' ~1 ms per-group call."""
     kcols = list(keys)
     key_fields = [partials.schema[k] for k in kcols]
     out_schema = StructType(list(key_fields) + [StructField(out_col, BinaryType())])
 
     def merge_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cur_key: tuple | None = None
-        cur = None
-        out_rows: list[tuple] = []
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            key_arrays = [pdf[k].to_numpy() for k in kcols]
-            for i, blob in enumerate(pdf[out_col]):
-                k = _norm_key(a[i] for a in key_arrays)
-                if k != cur_key:
-                    if cur is not None:
-                        out_rows.append((*cur_key, cur.to_bytes()))
-                    cur_key = k
-                    cur = decode(bytes(blob))
-                else:
-                    cur.merge(decode(bytes(blob)))
-            if len(out_rows) >= 10000:
-                yield pd.DataFrame(out_rows, columns=kcols + [out_col])
-                out_rows = []
-        if cur is not None:
-            out_rows.append((*cur_key, cur.to_bytes()))
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=kcols + [out_col])
+        for frame in _whole_runs(batches, kcols):
+            starts = _run_starts(frame, kcols)
+            blobs = frame[out_col].to_numpy()
+            merged = []
+            for a, b in zip(starts, np.append(starts[1:], len(frame))):
+                s = decode(bytes(blobs[a]))
+                for blob in blobs[a + 1 : b]:
+                    s.merge(decode(bytes(blob)))
+                merged.append(s.to_bytes())
+            out = pd.DataFrame({k: frame[k].to_numpy()[starts] for k in kcols})
+            out[out_col] = merged
+            yield out
 
-    if co_located:
-        # groups are already co-located; only an in-partition sort is needed
-        shuffled = partials.sortWithinPartitions(*kcols)
-    else:
-        shuffled = partials.repartition(*kcols).sortWithinPartitions(*kcols)
+    shuffled = partials.repartition(*kcols).sortWithinPartitions(*kcols)
     return shuffled.mapInPandas(merge_stream, schema=out_schema)
 
 
@@ -290,78 +292,16 @@ def hll_agg(
     item_col: str,
     keys: Sequence[str],
     p: int = 12,
-    strategy: str = "combine",
-    flush_groups: int = 50_000,
 ) -> DataFrame:
-    """UDAF path: (keys..., sketch:binary) HLL value column.  Hashing happens
-    JVM-side (portable hash) so the Arrow batches carry int64s.
+    """Blob path: (keys..., sketch:binary), each blob the group's rows of
+    :func:`hll_registers` written as ``HyperLogLog.to_bytes()`` (the
+    precision byte, then the m uint8 registers)."""
 
-    The partial build is fully vectorized: per Arrow batch the (group, reg,
-    rho) relation is reduced with a C-path pandas groupby-max, and python
-    HyperLogLog objects are materialized ONCE per group at partition end —
-    high-cardinality keys (per-conv_id) cost the same per row as one key,
-    the same trick as ddsketch_partial."""
-    kcols = list(keys)
-    hashed = df.where(_col(item_col).isNotNull()).select(
-        *kcols, portable_hash64(_col(item_col)).alias("_h")
-    )
-    if strategy == "repartition":
-        hashed = hashed.repartition(*kcols)
-    key_fields = [hashed.schema[k] for k in kcols]
-    out_schema = StructType(list(key_fields) + [StructField("sketch", BinaryType())])
-    m = 1 << p
+    def fill(body: np.ndarray, frame: pd.DataFrame, group: np.ndarray) -> None:
+        body[group, frame["reg"].to_numpy()] = frame["rho"].to_numpy()
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sketches_go_spark.core.hashing import bit_length_u64
-
-        reg_parts: list[pd.DataFrame] = []
-        buffered = 0
-
-        def drain() -> pd.DataFrame:
-            regs = (
-                pd.concat(reg_parts, ignore_index=True)
-                .groupby([*kcols, "reg"], dropna=False, sort=False)["rho"]
-                .max()
-                .reset_index()
-            )
-            reg_arr = regs["reg"].to_numpy(dtype=np.int64)
-            rho_arr = regs["rho"].to_numpy(dtype=np.uint8)
-            rows = []
-            for gkey, idx in regs.groupby(kcols, dropna=False, sort=False).indices.items():
-                gtuple = gkey if isinstance(gkey, tuple) else (gkey,)
-                s = HyperLogLog(p)
-                s.registers[reg_arr[idx]] = rho_arr[idx]
-                rows.append((*gtuple, s.to_bytes()))
-            return pd.DataFrame(rows, columns=kcols + ["sketch"])
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            h = pdf["_h"].to_numpy(dtype=np.int64)
-            frame = pd.DataFrame({k: pdf[k].to_numpy() for k in kcols})
-            frame["reg"] = h % m
-            frame["rho"] = (
-                (HASH_BITS - p) + 1 - bit_length_u64(h >> p)
-            ).astype(np.uint8)
-            part = (
-                frame.groupby([*kcols, "reg"], sort=False, dropna=False)["rho"]
-                .max()
-                .reset_index()
-            )
-            reg_parts.append(part)
-            buffered += len(part)
-            if buffered >= flush_groups * 4:  # bound buffered register rows
-                yield drain()
-                reg_parts = []
-                buffered = 0
-        if reg_parts:
-            yield drain()
-
-    partials = hashed.mapInPandas(build, schema=out_schema)
-    return two_phase_merge(
-        partials, keys, HyperLogLog.from_bytes,
-        co_located=(strategy == "repartition"),
-    )
+    regs = hll_registers(df, item_col, keys, p)
+    return _serialize_runs(regs, keys, struct.pack("B", p), 1 << p, fill)
 
 
 def hll_estimate_udf(sketch: Column, est_decimals: int = 4) -> Column:
@@ -621,80 +561,18 @@ def cms_agg(
     keys: Sequence[str],
     depth: int = 4,
     width: int = 512,
-    strategy: str = "combine",
-    flush_groups: int = 50_000,
 ) -> DataFrame:
-    """UDAF path: encoded CMS value per group (columns pre-hashed JVM-side).
+    """Blob path: encoded CMS value per group, each blob the group's rows
+    of :func:`cms_counters` written as ``CountMinSketch.to_bytes()`` (depth
+    and width as two little-endian uint32, then the float64 table)."""
 
-    Vectorized build: per batch the (group, counter-cell) relation is reduced
-    with a C-path pandas groupby-sum; CountMinSketch objects materialize once
-    per group at partition end (same trick as hll_agg/ddsketch_partial)."""
-    kcols = list(keys)
-    hash_cols = [
-        F.pmod(portable_hash64(_col(item_col), cms_salt(j)), F.lit(width))
-        .cast("int")
-        .alias(f"_c{j}")
-        for j in range(depth)
-    ]
-    hashed = df.where(_col(item_col).isNotNull()).select(*kcols, *hash_cols)
-    if strategy == "repartition":
-        hashed = hashed.repartition(*kcols)
-    key_fields = [hashed.schema[k] for k in kcols]
-    out_schema = StructType(list(key_fields) + [StructField("sketch", BinaryType())])
+    def fill(body: np.ndarray, frame: pd.DataFrame, group: np.ndarray) -> None:
+        cell = frame["row"].to_numpy(dtype=np.int64) * width + frame["col"].to_numpy()
+        body.view(np.float64)[group, cell] = frame["cnt"].to_numpy()
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts: list[pd.DataFrame] = []
-        buffered = 0
-
-        def drain() -> pd.DataFrame:
-            cells = (
-                pd.concat(parts, ignore_index=True)
-                .groupby([*kcols, "_cell"], dropna=False, sort=False)["_w"]
-                .sum()
-                .reset_index()
-            )
-            cell_arr = cells["_cell"].to_numpy(dtype=np.int64)
-            w_arr = cells["_w"].to_numpy(dtype=np.float64)
-            rows = []
-            for gkey, idx in cells.groupby(kcols, dropna=False, sort=False).indices.items():
-                gtuple = gkey if isinstance(gkey, tuple) else (gkey,)
-                s = CountMinSketch(depth, width)
-                s.table.ravel()[cell_arr[idx]] = w_arr[idx]
-                rows.append((*gtuple, s.to_bytes()))
-            return pd.DataFrame(rows, columns=kcols + ["sketch"])
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            n = len(pdf)
-            # one (group, row*width+col) weight row per (input row, depth)
-            frames = []
-            for j in range(depth):
-                f2 = pd.DataFrame({k: pdf[k].to_numpy() for k in kcols})
-                f2["_cell"] = (
-                    j * width + pdf[f"_c{j}"].to_numpy(dtype=np.int64)
-                )
-                frames.append(f2)
-            stacked = pd.concat(frames, ignore_index=True)
-            stacked["_w"] = 1.0
-            part = (
-                stacked.groupby([*kcols, "_cell"], sort=False, dropna=False)["_w"]
-                .sum()
-                .reset_index()
-            )
-            parts.append(part)
-            buffered += len(part)
-            if buffered >= flush_groups * 4:
-                yield drain()
-                parts = []
-                buffered = 0
-        if parts:
-            yield drain()
-
-    partials = hashed.mapInPandas(build, schema=out_schema)
-    return two_phase_merge(
-        partials, keys, CountMinSketch.from_bytes,
-        co_located=(strategy == "repartition"),
+    counters = cms_counters(df, item_col, keys, depth, width)
+    return _serialize_runs(
+        counters, keys, struct.pack("<II", depth, width), 8 * depth * width, fill
     )
 
 
@@ -755,69 +633,18 @@ def bloom_agg(
     keys: Sequence[str],
     m_bits: int = 4096,
     k: int = 5,
-    strategy: str = "combine",
-    flush_groups: int = 50_000,
 ) -> DataFrame:
-    """UDAF path: encoded Bloom filter value per group.
+    """Blob path: encoded Bloom filter value per group, each blob the
+    group's rows of :func:`bloom_bits` written as ``BloomFilter.to_bytes()``
+    (m and k as two little-endian uint32, then the packbits bit array)."""
 
-    Vectorized build: per batch the distinct (group, bit-position) relation
-    is reduced with a C-path pandas drop_duplicates; BloomFilter objects
-    materialize once per group at partition end."""
-    kcols = list(keys)
-    pos_cols = [
-        F.pmod(portable_hash64(_col(item_col), bloom_salt(j)), F.lit(m_bits))
-        .cast("int")
-        .alias(f"_p{j}")
-        for j in range(k)
-    ]
-    hashed = df.where(_col(item_col).isNotNull()).select(*kcols, *pos_cols)
-    if strategy == "repartition":
-        hashed = hashed.repartition(*kcols)
-    key_fields = [hashed.schema[k2] for k2 in kcols]
-    out_schema = StructType(list(key_fields) + [StructField("sketch", BinaryType())])
+    def fill(body: np.ndarray, frame: pd.DataFrame, group: np.ndarray) -> None:
+        bits = np.zeros((body.shape[0], m_bits), dtype=bool)
+        bits[group, frame["pos"].to_numpy()] = True
+        body[:] = np.packbits(bits, axis=1)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts: list[pd.DataFrame] = []
-        buffered = 0
-
-        def drain() -> pd.DataFrame:
-            bits = pd.concat(parts, ignore_index=True).drop_duplicates(
-                [*kcols, "_pos"]
-            )
-            pos_arr = bits["_pos"].to_numpy(dtype=np.int64)
-            rows = []
-            for gkey, idx in bits.groupby(kcols, dropna=False, sort=False).indices.items():
-                gtuple = gkey if isinstance(gkey, tuple) else (gkey,)
-                s = BloomFilter(m_bits, k)
-                s.bits[pos_arr[idx]] = True
-                rows.append((*gtuple, s.to_bytes()))
-            return pd.DataFrame(rows, columns=kcols + ["sketch"])
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            frames = []
-            for j in range(k):
-                f2 = pd.DataFrame({k2: pdf[k2].to_numpy() for k2 in kcols})
-                f2["_pos"] = pdf[f"_p{j}"].to_numpy(dtype=np.int64)
-                frames.append(f2)
-            part = pd.concat(frames, ignore_index=True).drop_duplicates(
-                [*kcols, "_pos"]
-            )
-            parts.append(part)
-            buffered += len(part)
-            if buffered >= flush_groups * 4:
-                yield drain()
-                parts = []
-                buffered = 0
-        if parts:
-            yield drain()
-
-    partials = hashed.mapInPandas(build, schema=out_schema)
-    return two_phase_merge(
-        partials, keys, BloomFilter.from_bytes,
-        co_located=(strategy == "repartition"),
-    )
+    bits = bloom_bits(df, item_col, keys, m_bits, k)
+    return _serialize_runs(bits, keys, struct.pack("<II", m_bits, k), (m_bits + 7) // 8, fill)
 
 
 # =====================================================================
@@ -828,8 +655,6 @@ def kll_agg(
     value_col: str,
     keys: Sequence[str],
     k: int = 200,
-    strategy: str = "combine",
-    flush_groups: int = 50_000,
 ) -> DataFrame:
     def add(sk: KLLSketch, cols: dict) -> None:
         sk.add(np.asarray(cols[value_col], dtype=np.float64))
@@ -841,8 +666,6 @@ def kll_agg(
         lambda: KLLSketch(k),
         add,
         KLLSketch.from_bytes,
-        strategy=strategy,
-        flush_groups=flush_groups,
     )
 
 
@@ -851,8 +674,6 @@ def tdigest_agg(
     value_col: str,
     keys: Sequence[str],
     delta: float = 200.0,
-    strategy: str = "combine",
-    flush_groups: int = 50_000,
 ) -> DataFrame:
     def add(sk: TDigest, cols: dict) -> None:
         sk.add(np.asarray(cols[value_col], dtype=np.float64))
@@ -864,8 +685,6 @@ def tdigest_agg(
         lambda: TDigest(delta),
         add,
         TDigest.from_bytes,
-        strategy=strategy,
-        flush_groups=flush_groups,
     )
 
 

@@ -596,7 +596,6 @@ def connected_components(
     max_iters: int = 50,
     checkpoint: bool = True,
     checkpoint_dir: str | None = None,
-    pointer_jump: bool = False,
 ) -> DataFrame:
     """(node, component) for every node on a non-self-loop edge — component
     is the MINIMUM node id reachable, so the labeling is deterministic and
@@ -644,32 +643,7 @@ def connected_components(
     payloads; each round is map-side-combinable min-aggregation, so the wide
     exchange carries one row per distinct node, and skewed star centers
     (one huge near-dup cluster) are exactly the high-fanout nodes large-star
-    is designed to split across reducers.
-
-    ``pointer_jump`` (default OFF) appends one pointer-doubling step per
-    round: with ``m(x)`` the minimum out-neighbor of ``x`` in the round's
-    relation (small-star output always points strictly downward, so ``m`` is
-    a parent map), the relation becomes
-    ``{(u, m(v)) : (u,v)} ∪ {(u, m(u)) : u}`` — every edge jumps to its
-    target's parent while every node keeps an edge to its own parent, so
-    components are preserved EXACTLY (u–m(v) via the jumped edge, v–m(v) via
-    v's parent edge) while pointer depth roughly quadruples-per-round instead
-    of doubling.  Convergence detection is unchanged (exact relation
-    equality), and a converged min-star is a fixed point of the composite
-    step, so the result labeling is identical with or without the jump.
-
-    When to flip it on — MEASURED, not guessed: the jump trades ~2 extra
-    shuffle stages per round (a min-aggregation + a self-join) for a ~40%
-    round-count cut, so it wins only when the graph's DIAMETER makes round
-    count dominate wall time.  On a bare 65,536-node chain it cut rounds
-    18 → 11 and wall 35.1 s → 26.0 s (local[8]); on the 4M-edge mixed graph
-    the star edges keep every round's data volume at ~4M rows, and the jump
-    cut rounds 17 → 10 but LOST wall time at local[8] (149 s → 193 s) while
-    roughly tying at local[32] (134 s → 127 s); on the real sf0.1 dedup
-    query (<5 rounds, small edges) it loses ~17% outright — real near-dup
-    graphs converge in a handful of rounds, where extra fixed stage latency
-    is pure overhead.  Default off; reach for it only on adversarial-
-    diameter graphs (long chains / deep hierarchies)."""
+    is designed to split across reducers."""
     import json
     import os
     import time
@@ -785,22 +759,6 @@ def connected_components(
             .distinct()
         )
 
-    def _jump(df: DataFrame) -> DataFrame:
-        # (u,v) -> (u, m(v)) plus parent edges (u, m(u)); m(x) < x always
-        # (small-star output is strictly downward-pointing), so orientation
-        # u > v is preserved and targets only ever decrease toward the
-        # component minimum.
-        mins = df.groupBy("u").agg(F.min("v").alias("m"))
-        jumped = df.join(
-            mins.select(F.col("u").alias("v"), "m"), "v", "left"
-        ).select("u", F.coalesce("m", "v").alias("v"))
-        parents = mins.select("u", F.col("m").alias("v"))
-        return (
-            jumped.union(parents)
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
     if checkpoint_dir is None and checkpoint:
         e = e.localCheckpoint(eager=True)
     e0 = (
@@ -834,8 +792,6 @@ def connected_components(
     for i in range(max(start_round, 1), max_iters + 1):
         t0 = time.time()
         nxt = _small_star(_large_star(e))
-        if pointer_jump:
-            nxt = _jump(nxt)
         if checkpoint_dir is not None:
             nxt = _commit_round(nxt, i, time.time() - t0, False)
         elif checkpoint:

@@ -50,48 +50,82 @@ def test_hll_relational_matches_core(spark, items_df):
         assert est[g] == pytest.approx(core.estimate(), abs=1e-3)
 
 
-def test_hll_udaf_matches_relational(spark, items_df):
-    sdf, _ = items_df
-    p = 10
-    rel = (
-        sk.hll_estimate_relational(sdf, "item", ["g"], p=p)
-        .toPandas()
-        .set_index("g")["est"]
-    )
-    udaf = (
+@pytest.fixture(scope="module")
+def keyed_items(spark):
+    """~200 small groups, a null-key group, one ~3000-item group whose
+    relation rows span many 97-row Arrow batches, and some null items."""
+    rng = np.random.default_rng(29)
+    n = 12000
+    g = rng.integers(0, 200, n).astype(str).astype(object)
+    g[rng.choice(n, 400, replace=False)] = None
+    g[:4000] = "wide"
+    item = np.array([f"it-{i}" for i in rng.integers(0, 5000, n)], dtype=object)
+    item[:4000] = [f"w-{i % 3000}" for i in range(4000)]
+    item[rng.choice(n, 300, replace=False)] = None
+    pdf = pd.DataFrame({"g": g, "item": item})
+    return spark.createDataFrame(pdf).repartition(5), pdf
+
+
+def _blobs_by_key(spark, sketches) -> dict:
+    """{g: blob} of a blob DataFrame collected with 97-row Arrow batches;
+    asserts one row per group."""
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "97")
+    try:
+        rows = sketches.collect()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    out = {r["g"]: bytes(r["sketch"]) for r in rows}
+    assert len(out) == len(rows)
+    return out
+
+
+def _core_blobs(pdf, build) -> dict:
+    """{g: build(items).to_bytes()} over each group's non-null items."""
+    live = pdf[pdf["item"].notna()]
+    return {
+        (None if pd.isna(g) else g): build(sub["item"].tolist()).to_bytes()
+        for g, sub in live.groupby("g", dropna=False)
+    }
+
+
+def test_hll_udaf_matches_relational(spark, keyed_items):
+    """hll_agg blobs are byte-identical to core HyperLogLogs built from the
+    raw items (p=9), the null key and a group spanning Arrow batches
+    included; hll_estimate_udf reads them as the core estimates."""
+    sdf, pdf = keyed_items
+    p = 9
+    got = _blobs_by_key(spark, sk.hll_agg(sdf, "item", ["g"], p=p))
+    want = _core_blobs(pdf, lambda items: HyperLogLog(p).add_hashes(portable_hash64_np(items)))
+    assert None in want and len(want) == 202
+    assert got == want
+    est = (
         sk.hll_agg(sdf, "item", ["g"], p=p)
         .select("g", sk.hll_estimate_udf(F.col("sketch")).alias("est"))
-        .toPandas()
-        .set_index("g")["est"]
+        .collect()
     )
-    pd.testing.assert_series_equal(rel.sort_index(), udaf.sort_index())
+    for r in est:
+        assert r["est"] == pytest.approx(HyperLogLog.from_bytes(want[r["g"]]).estimate(), abs=1e-4)
 
 
-def test_cms_udaf_matches_relational(spark, items_df):
-    sdf, pdf = items_df
-    counters_rel = sk.cms_counters(sdf, "item", ["g"], depth=4, width=256).toPandas()
-    blobs = sk.cms_agg(sdf, "item", ["g"], depth=4, width=256).collect()
+def test_cms_udaf_matches_relational(spark, keyed_items):
+    """cms_agg blobs are byte-identical to core CountMinSketches built from
+    the raw items (depth 3, width 200)."""
     from sketches_go_spark.core.cms import CountMinSketch
 
-    for row in blobs:
-        cms = CountMinSketch.from_bytes(bytes(row["sketch"]))
-        sub = counters_rel[counters_rel["g"] == row["g"]]
-        table = np.zeros((4, 256))
-        for r in sub.itertuples():
-            table[int(r.row), int(r.col)] = r.cnt
-        assert np.array_equal(cms.table, table)
+    sdf, pdf = keyed_items
+    got = _blobs_by_key(spark, sk.cms_agg(sdf, "item", ["g"], depth=3, width=200))
+    assert got == _core_blobs(pdf, lambda items: CountMinSketch(3, 200).add(items))
 
 
-def test_bloom_udaf_matches_relational(spark, items_df):
-    sdf, _ = items_df
-    bits_rel = sk.bloom_bits(sdf, "item", ["g"], m_bits=2048, k=4).toPandas()
-    blobs = sk.bloom_agg(sdf, "item", ["g"], m_bits=2048, k=4).collect()
+def test_bloom_udaf_matches_relational(spark, keyed_items):
+    """bloom_agg blobs are byte-identical to core BloomFilters built from
+    the raw items (3001 bits, so the packed array ends in padding; k=3)."""
     from sketches_go_spark.core.bloom import BloomFilter
 
-    for row in blobs:
-        bf = BloomFilter.from_bytes(bytes(row["sketch"]))
-        expect = set(bits_rel[bits_rel["g"] == row["g"]]["pos"])
-        assert set(np.flatnonzero(bf.bits)) == expect
+    sdf, pdf = keyed_items
+    got = _blobs_by_key(spark, sk.bloom_agg(sdf, "item", ["g"], m_bits=3001, k=3))
+    assert got == _core_blobs(pdf, lambda items: BloomFilter(3001, 3).add(items))
 
 
 def test_kll_tdigest_spark_accuracy(spark):
@@ -116,11 +150,12 @@ def test_kll_tdigest_spark_accuracy(spark):
         assert abs(rank - q) <= tol
 
 
-def test_two_phase_high_cardinality_bounded_memory(spark):
-    """10^5 distinct group keys through the streaming merge topology with a
-    small flush threshold (forces multiple partial flushes per task): results
-    must be identical to the unflushed run, and per-group estimates exact for
-    single-item groups.  Also exercises strategy='repartition'."""
+def test_two_phase_high_cardinality_bounded_memory(spark, monkeypatch):
+    """10^5 distinct group keys: every HLL blob equals the core sketch of
+    its group's single item.  The KLL build, with its flush bound cut to 50
+    groups and 97-row Arrow batches, emits several partials per group per
+    task, and the streaming merge folds them back into each group's exact
+    values."""
     n_groups = 100_000
     df = (
         spark.range(n_groups)
@@ -131,30 +166,37 @@ def test_two_phase_high_cardinality_bounded_memory(spark):
         .repartition(8)
     )
     p = 6
-    flushed = sk.hll_agg(df, "item", ["conv_id"], p=p, flush_groups=2_000).toPandas()
-    assert len(flushed) == n_groups
-    # flushing must not change the result: HLL register-max merge is
-    # order-insensitive, so the encoded sketches are byte-identical
-    plain = sk.hll_agg(df, "item", ["conv_id"], p=p, flush_groups=10**9).toPandas()
-    l = flushed.sort_values("conv_id").reset_index(drop=True)
-    r = plain.sort_values("conv_id").reset_index(drop=True)
-    assert (l["conv_id"] == r["conv_id"]).all()
-    assert all(bytes(a) == bytes(b) for a, b in zip(l["sketch"], r["sketch"]))
-    # repartition strategy: same bytes again (single item per group)
-    rep = (
-        sk.hll_agg(df, "item", ["conv_id"], p=p, strategy="repartition",
-                   flush_groups=2_000)
-        .toPandas()
-        .sort_values("conv_id")
-        .reset_index(drop=True)
-    )
-    assert all(bytes(a) == bytes(b) for a, b in zip(l["sketch"], rep["sketch"]))
-    # every group holds exactly 1 distinct item -> estimate 1.0
-    samp = l.iloc[:: n_groups // 50]
-    for blob in samp["sketch"]:
-        assert HyperLogLog.from_bytes(bytes(blob)).estimate() == pytest.approx(
-            1.0, abs=0.01
-        )
+    got = sk.hll_agg(df, "item", ["conv_id"], p=p).toPandas()
+    assert len(got) == n_groups and got["conv_id"].is_unique
+    want = [HyperLogLog(p).add_hashes(portable_hash64_np([f"u-{j}"])).to_bytes() for j in range(7)]
+    for conv_id, blob in zip(got["conv_id"], got["sketch"]):
+        assert bytes(blob) == want[int(conv_id[5:]) % 7]
+
+    vals = spark.range(20_000).select(
+        F.pmod("id", F.lit(2000)).cast("string").alias("g"), F.col("id").cast("double").alias("v")
+    ).repartition(3)
+
+    def partial_rows() -> int:
+        with monkeypatch.context() as m:
+            m.setattr(sk, "two_phase_merge", lambda partials, *a, **kw: partials)
+            return sk.kll_agg(vals, "v", ["g"], k=200).count()
+
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "97")
+    try:
+        unflushed = partial_rows()
+        monkeypatch.setattr(sk, "_FLUSH_GROUPS", 50)
+        assert partial_rows() > unflushed
+        merged = sk.kll_agg(vals, "v", ["g"], k=200).collect()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    assert len(merged) == 2000
+    for r in merged:
+        s = KLLSketch.from_bytes(bytes(r["sketch"]))
+        g = int(r["g"])
+        # 10 values per group never compact at k=200: level 0 holds them all
+        assert s.n == 10
+        assert np.array_equal(np.sort(s.levels[0]), np.arange(g, 20_000, 2000, dtype=float))
 
 
 def test_null_group_key_merges_to_one_row(spark):

@@ -145,22 +145,25 @@ def test_sketch_to_bins_bridge(spark, sdf, data):
 
 
 def test_companion_udaf_plans_have_no_per_group_python(spark, sdf):
-    """The companion-sketch UDAF paths must use the streaming merge topology:
+    """The companion-sketch UDAF paths must use streaming key-run passes:
     no FlatMapGroupsInPandas (per-group applyInPandas) anywhere — its ~1 ms
     per-group invocation dominates at 10^5+ keys."""
     from sketches_go_spark.functions import sketch_fns as skf
 
+    items = sdf.withColumn("item", F.col("v").cast("string"))
+    # HLL / CMS / Bloom: one assembler over the Catalyst relation;
+    # KLL / t-digest: partial build + streaming merge
     plans = {
-        "hll": skf.hll_agg(sdf.withColumn("item", F.col("v").cast("string")),
-                           "item", ["g"], p=6),
-        "kll": skf.kll_agg(sdf, "v", ["g"], k=50),
-        "tdigest": skf.tdigest_agg(sdf, "v", ["g"], delta=50.0),
+        "hll": (skf.hll_agg(items, "item", ["g"], p=6), 1),
+        "cms": (skf.cms_agg(items, "item", ["g"]), 1),
+        "bloom": (skf.bloom_agg(items, "item", ["g"]), 1),
+        "kll": (skf.kll_agg(sdf, "v", ["g"], k=50), 2),
+        "tdigest": (skf.tdigest_agg(sdf, "v", ["g"], delta=50.0), 2),
     }
-    for name, df in plans.items():
+    for name, (df, stages) in plans.items():
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "FlatMapGroupsInPandas" not in plan, name
-        # exactly the two mapInPandas stages: partial build + streaming merge
-        assert plan.count("MapInPandas") == 2, name
+        assert plan.count("MapInPandas") == stages, name
 
 
 def test_pair_operators_use_equality_joins(spark):
