@@ -1,6 +1,7 @@
 """Benchmark harness — prints ONE JSON line with per-query seconds.
 
-Run:  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 python bench.py
+Run:  SPARK_GRAFT_SF_DIR=<sf0.1 parquet dir> python bench.py
+      (local[nproc]; SPARK_GRAFT_CPUS=N sets another width)
 
 Headline queries: the driver-contract sketch queries at the given sf plus a
 large synthetic transcripts sketch-build (the 100-TB proxy: generation is
@@ -17,7 +18,8 @@ import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# cores of this host (what `nproc` prints) unless SPARK_GRAFT_CPUS says otherwise
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 # 10M amortizes the ~2s fixed job overhead that dominated at 5M — the
 # headline turns_per_sec then reflects pipeline capacity, not job setup
 SYNTH_TURNS = int(os.environ.get("SGS_BENCH_SYNTH_TURNS", "10000000"))

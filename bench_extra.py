@@ -19,7 +19,8 @@ import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# cores of this host (what `nproc` prints) unless SPARK_GRAFT_CPUS says otherwise
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 NOOP = os.environ.get("SGS_NOOP", "0") == "1"
 
 

@@ -1,8 +1,9 @@
 """Scaling-efficiency benchmark: the same sketch job at two parallelism
-levels (local[8] vs local[32] — the sandbox proxy for N vs 4N executors, per
-BASELINE.md), reporting throughput at both and efficiency = speedup / 4.
+levels (by default local[nproc // 4] vs local[nproc] — the single-host proxy for
+N vs 4N executors, per BASELINE.md), reporting throughput at both and
+efficiency = speedup / (high / low).
 
-Run:  python scaling_bench.py [--turns 100000000]
+Run:  python scaling_bench.py [--turns 100000000] [--low N --high 4N]
 
 Protocol (hard-won on this host — see BASELINE.md "environment notes"):
 - each level runs in a fresh subprocess JVM, heap scaled with cores
@@ -300,8 +301,9 @@ def measure(
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--turns", type=int, default=100_000_000)
-    ap.add_argument("--low", type=int, default=8)
-    ap.add_argument("--high", type=int, default=32)
+    nproc = len(os.sched_getaffinity(0))
+    ap.add_argument("--low", type=int, default=max(1, nproc // 4))
+    ap.add_argument("--high", type=int, default=nproc)
     ap.add_argument("--reps", type=int, default=5)
     ap.add_argument("--job",
                     choices=["relational", "udaf", "udaf_bins", "skew",

@@ -13,6 +13,11 @@ re-expressed Spark-first:
 - skewed group keys are handled with explicit salting,
 - jobs checkpoint per-partition encoded partials and resume by decode-and-merge.
 
+Importing the package inside a PySpark task runs a one-time worker bootstrap
+(:mod:`sketches_go_spark.worker_bootstrap`): the reused Python worker stops
+re-reading ``pyspark.zip``'s directory and re-scanning its import-time
+objects on every task.  It changes nothing in the driver.
+
 No code is copied from the reference; reference files are cited in docstrings
 (file:line) purely to document behavioral parity.
 """
@@ -35,3 +40,6 @@ from sketches_go_spark.core.protobuf import (  # noqa: F401
     decode_proto,
     encode_proto,
 )
+from sketches_go_spark.worker_bootstrap import bootstrap as _bootstrap_worker
+
+_bootstrap_worker()

@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
+    FloatType,
     IntegerType,
     StructField,
     StructType,
@@ -272,23 +273,74 @@ def summary_from_bins(
 # =====================================================================
 # UDAF path — sketch as an encoded binary value
 # =====================================================================
+# Hidden column carrying a floating-point key's null flag into a Python
+# stage: Arrow hands such a key's nulls to pandas as NaN, while Spark groups
+# null and NaN apart.
+_NULL_FLAG = "__sgs_null_{}"
+
+
+def _with_null_flags(df: DataFrame, kcols: Sequence[str]) -> DataFrame:
+    """``df`` plus the hidden null flag of each FLOAT/DOUBLE key; the key
+    helpers below find the flags by name."""
+    flags = [
+        F.col(k).isNull().alias(_NULL_FLAG.format(k))
+        for k in kcols
+        if isinstance(df.schema[k].dataType, (DoubleType, FloatType))
+    ]
+    return df.select("*", *flags) if flags else df
+
+
+def _group_cols(columns: Sequence[str], kcols: Sequence[str]) -> list[str]:
+    """The keys, then the null flags among ``columns``: what a pandas
+    groupby over the Python stage's rows must group on."""
+    return list(kcols) + [f for f in map(_NULL_FLAG.format, kcols) if f in columns]
+
+
+def _key_arrays(pdf: pd.DataFrame, kcols: Sequence[str]) -> list[np.ndarray]:
+    """The arrays that decide key equality: each key, after its null flag
+    where the frame carries one."""
+    out = []
+    for k in kcols:
+        flag = _NULL_FLAG.format(k)
+        if flag in pdf:
+            out.append(pdf[flag].to_numpy(dtype=bool))
+        out.append(pdf[k].to_numpy())
+    return out
+
+
 def _same_key(a: tuple, b: tuple) -> bool:
-    """Group-key equality with every null (None, NaN, NaT) equal to every
-    other: Spark groups nulls together, pandas hands them over as NaN."""
+    """Equality of two rows of ``_key_arrays`` as Spark groups them: NaN
+    equals NaN and -0.0 equals 0.0; pandas' nulls (None, NaN, NaT) are
+    equal to each other, and the null flags keep a null float key apart
+    from a NaN one."""
     return all(x == y or (pd.isna(x) and pd.isna(y)) for x, y in zip(a, b))
 
 
 def _run_starts(pdf: pd.DataFrame, kcols: Sequence[str], prev_key: tuple | None = None) -> np.ndarray:
     """Positions where a new key run starts in a key-sorted frame.  Row 0
-    starts one unless it continues ``prev_key``, the key of the row before
-    the frame."""
+    starts one unless it continues ``prev_key``, the last row of the
+    previous frame's ``_key_arrays``."""
     new = np.zeros(len(pdf), dtype=bool)
-    for k in kcols:
-        a = pdf[k].to_numpy()
+    arrays = _key_arrays(pdf, kcols)
+    for a in arrays:
         null = pd.isna(a)
         new[1:] |= (a[1:] != a[:-1]) & ~(null[1:] & null[:-1])
-    new[0] = prev_key is None or not _same_key(prev_key, tuple(pdf[k].iat[0] for k in kcols))
+    new[0] = prev_key is None or not _same_key(prev_key, tuple(a[0] for a in arrays))
     return np.flatnonzero(new)
+
+
+def _key_frame(frame: pd.DataFrame, kcols: Sequence[str], rows) -> pd.DataFrame:
+    """The keys of ``frame[rows]`` as output columns.  A flagged floating
+    key becomes a masked ``FloatingArray``, so the Arrow export keeps NaN
+    apart from null, with -0.0 normalized to 0.0 as Spark's grouping does."""
+    out = {}
+    for k in kcols:
+        a = frame[k].to_numpy()[rows]
+        flag = _NULL_FLAG.format(k)
+        if flag in frame:
+            a = pd.arrays.FloatingArray(a + a.dtype.type(0), frame[flag].to_numpy(dtype=bool)[rows])
+        out[k] = a
+    return pd.DataFrame(out)
 
 
 def _whole_runs(batches: Iterator[pd.DataFrame], kcols: Sequence[str]) -> Iterator[pd.DataFrame]:
@@ -302,7 +354,7 @@ def _whole_runs(batches: Iterator[pd.DataFrame], kcols: Sequence[str]) -> Iterat
         if pdf.empty:
             continue
         starts = _run_starts(pdf, kcols, prev_key)
-        prev_key = tuple(pdf[k].iat[-1] for k in kcols)
+        prev_key = tuple(a[-1] for a in _key_arrays(pdf, kcols))
         if starts.size == 0:  # the whole batch continues the pending run
             pending.append(pdf)
             continue
@@ -332,7 +384,7 @@ def _sketch_rows(
     blobs = pa.Array.from_buffers(
         pa.large_binary(), starts.size, [None, pa.py_buffer(offsets), pa.py_buffer(data)]
     )
-    out = pd.DataFrame({k: frame[k].to_numpy()[starts] for k in kcols})
+    out = _key_frame(frame, kcols, starts)
     out["sketch"] = blobs.to_numpy(zero_copy_only=False)
     return out
 
@@ -413,11 +465,13 @@ def _pandas_build(
     out_schema = StructType(list(key_fields) + [StructField("sketch", BinaryType())])
     cols = list(keys) + [value_col] + ([weight_col] if weight_col else [])
     kcols = list(keys)
+    source = _with_null_flags(df.select(*cols), kcols)
+    gcols = _group_cols(source.columns, kcols)
 
     def drain(parts: list[pd.DataFrame]) -> pd.DataFrame:
         bins = (
             pd.concat(parts, ignore_index=True)
-            .groupby([*kcols, "sign", "bucket"], sort=True, dropna=False)
+            .groupby([*gcols, "sign", "bucket"], sort=True, dropna=False)
             .agg(count=("count", "sum"), vw=("vw", "sum"), mn=("mn", "min"), mx=("mx", "max"))
             .reset_index()
         )
@@ -458,12 +512,12 @@ def _pandas_build(
             # row order, groupby reduces in occurrence order either way), so
             # the float sums are bit-identical to the direct-key groupby.
             codes, uniqs = {}, {}
-            for k in kcols:
+            for k in gcols:
                 codes[k], uniqs[k] = pd.factorize(
                     pdf[k].to_numpy(), use_na_sentinel=False
                 )
-            ccols = [f"_c_{k}" for k in kcols]
-            frame = pd.DataFrame({c: codes[k] for c, k in zip(ccols, kcols)})
+            ccols = [f"_c_{k}" for k in gcols]
+            frame = pd.DataFrame({c: codes[k] for c, k in zip(ccols, gcols)})
             frame["sign"] = sign
             frame["bucket"] = bucket
             frame["w"] = w
@@ -474,9 +528,9 @@ def _pandas_build(
                 .agg(count=("w", "sum"), vw=("vw", "sum"), mn=("v", "min"), mx=("v", "max"))
                 .reset_index()
             )
-            for c, k in zip(ccols, kcols):
+            for c, k in zip(ccols, gcols):
                 part[k] = uniqs[k].take(part[c].to_numpy())
-            parts.append(part[[*kcols, "sign", "bucket", "count", "vw", "mn", "mx"]])
+            parts.append(part[[*gcols, "sign", "bucket", "count", "vw", "mn", "mx"]])
             buffered += len(part)
             if buffered >= flush_rows:
                 yield drain(parts)
@@ -488,7 +542,7 @@ def _pandas_build(
         from sketches_go_spark.plans.metrics import instrument_map_in_pandas
 
         build = instrument_map_in_pandas(build, metrics)
-    return df.select(*cols).mapInPandas(build, schema=out_schema)
+    return source.mapInPandas(build, schema=out_schema)
 
 
 def ddsketch_merge(
@@ -522,7 +576,7 @@ def ddsketch_merge(
         from sketches_go_spark.plans.metrics import instrument_map_in_pandas
 
         merge_stream = instrument_map_in_pandas(merge_stream, metrics)
-    shuffled = partials.repartition(*kcols).sortWithinPartitions(*kcols)
+    shuffled = _with_null_flags(partials, kcols).repartition(*kcols).sortWithinPartitions(*kcols)
     return shuffled.mapInPandas(merge_stream, schema=out_schema)
 
 
@@ -625,7 +679,11 @@ def _ddsketch_agg_from_bins(
         from sketches_go_spark.plans.metrics import instrument_map_in_pandas
 
         assemble = instrument_map_in_pandas(assemble, metrics)
-    shuffled = ext.repartition(*kcols).sortWithinPartitions(*kcols, "sign", "bucket")
+    shuffled = (
+        _with_null_flags(ext, kcols)
+        .repartition(*kcols)
+        .sortWithinPartitions(*kcols, "sign", "bucket")
+    )
     return shuffled.mapInPandas(assemble, schema=out_schema)
 
 
@@ -657,13 +715,12 @@ def with_quantiles(
             return f"{prefix}{int(pct)}"
         return f"{prefix}{str(pct).replace('.', '_')}"
 
-    tmp = sketches.withColumn("_qs", extract(F.col(sketch_col)))
-    for i, q in enumerate(qs):
+    def estimate(i: int) -> Column:
         c = F.col("_qs").getField(f"_q{i}")
-        if estimate_decimals is not None:
-            c = F.round(c, estimate_decimals)
-        tmp = tmp.withColumn(colname(q), c)
-    return tmp.drop("_qs")
+        return c if estimate_decimals is None else F.round(c, estimate_decimals)
+
+    tmp = sketches.withColumn("_qs", extract(F.col(sketch_col)))
+    return tmp.withColumns({colname(q): estimate(i) for i, q in enumerate(qs)}).drop("_qs")
 
 
 def with_summary(
@@ -692,13 +749,12 @@ def with_summary(
         out[~valid] = np.nan
         return out
 
-    tmp = sketches.withColumn("_s", extract(F.col(sketch_col)))
-    for name in ("cnt", "xsum", "xmin", "xmax"):
+    def stat(name: str) -> Column:
         c = F.col("_s").getField(name)
-        if estimate_decimals is not None and name != "cnt":
-            c = F.round(c, estimate_decimals)
-        tmp = tmp.withColumn(name, c)
-    return tmp.drop("_s")
+        return c if estimate_decimals is None or name == "cnt" else F.round(c, estimate_decimals)
+
+    tmp = sketches.withColumn("_s", extract(F.col(sketch_col)))
+    return tmp.withColumns({name: stat(name) for name in ("cnt", "xsum", "xmin", "xmax")}).drop("_s")
 
 
 # =====================================================================

@@ -39,7 +39,14 @@ from sketches_go_spark.core.hashing import HASH_BITS
 from sketches_go_spark.core.hll import HyperLogLog, hll_alpha
 from sketches_go_spark.core.kll import KLLSketch
 from sketches_go_spark.core.tdigest import TDigest
-from sketches_go_spark.functions.ddsketch_fns import _run_starts, _sketch_rows, _whole_runs
+from sketches_go_spark.functions.ddsketch_fns import (
+    _group_cols,
+    _key_frame,
+    _run_starts,
+    _sketch_rows,
+    _whole_runs,
+    _with_null_flags,
+)
 from sketches_go_spark.functions.expressions import portable_hash64
 
 
@@ -84,8 +91,11 @@ def _serialize_runs(
             offsets = np.arange(starts.size + 1, dtype=np.int64) * width
             yield _sketch_rows(frame, starts, kcols, blobs.ravel(), offsets)
 
-    return rel.repartition(*kcols).sortWithinPartitions(*kcols).mapInPandas(
-        assemble, schema=out_schema
+    return (
+        _with_null_flags(rel, kcols)
+        .repartition(*kcols)
+        .sortWithinPartitions(*kcols)
+        .mapInPandas(assemble, schema=out_schema)
     )
 
 
@@ -122,22 +132,25 @@ def two_phase_agg(
     key_fields = [df.schema[k] for k in keys]
     out_schema = StructType(list(key_fields) + [StructField(out_col, BinaryType())])
     kcols = list(keys)
+    source = _with_null_flags(df.select(*keys, *cols), kcols)
+    gcols = _group_cols(source.columns, kcols)
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         acc: dict = {}
 
         def drain() -> pd.DataFrame:
-            rows = [
-                (*(gk if isinstance(gk, tuple) else (gk,)), s.to_bytes())
-                for gk, s in acc.items()
-            ]
-            return pd.DataFrame(rows, columns=kcols + [out_col])
+            groups = pd.DataFrame(
+                [gk if isinstance(gk, tuple) else (gk,) for gk in acc], columns=gcols
+            )
+            out = _key_frame(groups, kcols, slice(None))
+            out[out_col] = [s.to_bytes() for s in acc.values()]
+            return out
 
         for pdf in batches:
             if pdf.empty:
                 continue
             arrs = {c: pdf[c].to_numpy() for c in cols}
-            for gkey, idx in pdf.groupby(kcols, dropna=False, sort=False).indices.items():
+            for gkey, idx in pdf.groupby(gcols, dropna=False, sort=False).indices.items():
                 s = acc.get(gkey)
                 if s is None:
                     s = acc[gkey] = make()
@@ -148,7 +161,7 @@ def two_phase_agg(
         if acc:
             yield drain()
 
-    partials = df.select(*keys, *cols).mapInPandas(build, schema=out_schema)
+    partials = source.mapInPandas(build, schema=out_schema)
     return two_phase_merge(partials, keys, decode, out_col)
 
 
@@ -177,11 +190,11 @@ def two_phase_merge(
                 for blob in blobs[a + 1 : b]:
                     s.merge(decode(bytes(blob)))
                 merged.append(s.to_bytes())
-            out = pd.DataFrame({k: frame[k].to_numpy()[starts] for k in kcols})
+            out = _key_frame(frame, kcols, starts)
             out[out_col] = merged
             yield out
 
-    shuffled = partials.repartition(*kcols).sortWithinPartitions(*kcols)
+    shuffled = _with_null_flags(partials, kcols).repartition(*kcols).sortWithinPartitions(*kcols)
     return shuffled.mapInPandas(merge_stream, schema=out_schema)
 
 
@@ -713,15 +726,15 @@ def with_sketch_quantiles(
     sketch_col: str = "sketch",
     prefix: str = "p",
 ) -> DataFrame:
+    def colname(q: float) -> str:
+        pct = q * 100
+        return f"{prefix}{int(pct)}" if float(pct).is_integer() else f"{prefix}{pct}".replace(".", "_")
+
     extract = sketch_quantiles_udf(decode, quantiles)
     tmp = sketches.withColumn("_qarr", extract(F.col(sketch_col)))
-    for i, q in enumerate(quantiles):
-        pct = q * 100
-        name = f"{prefix}{int(pct)}" if float(pct).is_integer() else (
-            f"{prefix}{pct}".replace(".", "_")
-        )
-        tmp = tmp.withColumn(name, F.element_at("_qarr", i + 1))
-    return tmp.drop("_qarr")
+    return tmp.withColumns(
+        {colname(q): F.element_at("_qarr", i + 1) for i, q in enumerate(quantiles)}
+    ).drop("_qarr")
 
 
 def cms_heavy_hitters(
