@@ -3,12 +3,18 @@
 **Relational path (default for bulk batch):** bins-as-rows.  The sketch build
 is literally ``groupBy(keys, sign, bucket).sum(weight)`` — pure Catalyst,
 whole-stage codegen, map-side partial aggregation, zero Python.  Quantile
-extraction is a window cumsum + conditional min — also pure Catalyst.  This
-is the plan you want at 100 TB: the only wide shuffle keys on
-``(keys, sign, bucket)``, which is fine-grained even when a single group key
-is hot (bucket spreads a hot key over ~hundreds of reducers), and the shuffle
-payload after partial agg is at most ``groups x buckets`` rows regardless of
-input size.
+extraction (:func:`quantiles_from_bins`) is ONE window per group ordered by
+(sign, bucket), holding the per-sign running counts and the group totals,
+then an explode of the quantile literals and a ``groupBy(keys, q)`` of
+conditional mins that reuses the window's partitioning — also pure
+Catalyst: two exchanges in all, one window, no join.  Each of its steps is
+one projection of Spark SQL text, which the JVM parses once; a Column tree
+would cost one py4j round trip per node.  This is the plan you want at
+100 TB: the only wide shuffle over raw rows keys on ``(keys, sign,
+bucket)``, which is fine-grained even when a single group key is hot
+(bucket spreads a hot key over ~hundreds of reducers), and the shuffle
+payload after partial agg is at most ``groups x buckets`` rows regardless
+of input size.
 
 **UDAF path:** the sketch as a *value* — an encoded ``BinaryType`` blob.
 Three build strategies (see :func:`ddsketch_agg`): ``bins``, the default
@@ -63,7 +69,12 @@ from sketches_go_spark.core.ddsketch import (
     _offsets,
 )
 from sketches_go_spark.core.encoding import decode_batch, encode_batch
-from sketches_go_spark.functions.expressions import bucket_value, sign_bucket
+from sketches_go_spark.functions.expressions import (
+    bucket_value,
+    double_sql,
+    name_sql,
+    sign_bucket,
+)
 
 DEFAULT_QUANTILES = (0.5, 0.95, 0.99)
 
@@ -97,9 +108,9 @@ def build_bins(
     )
     bins = (
         df.select(*keys, sign.alias("sign"), bucket.alias("bucket"), weight.alias("w"))
-        .where(F.col("sign").isNotNull())
+        .where("sign IS NOT NULL")
         .groupBy(*keys, "sign", "bucket")
-        .agg(F.sum("w").alias("count"))
+        .agg(F.expr("sum(w) AS count"))
     )
     return collapse_bins(bins, keys, config)
 
@@ -152,73 +163,56 @@ def quantiles_from_bins(
     """
     config = config or DDSketchConfig()
     mapping = config.mapping()
-    spark = bins.sparkSession
-    qs = [float(q) for q in quantiles]
-
-    cum_w = (
-        Window.partitionBy(*keys, "sign")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, 0)
+    k = [name_sql(c) for c in keys]
+    part = f"PARTITION BY {', '.join(k)} " if k else ""
+    # ONE window per group ordered by (sign, bucket): the per-sign running
+    # counts are conditional running sums (rows of the other signs add
+    # NULL), the group totals unbounded-frame aggregates of the same window
+    run = f"OVER ({part}ORDER BY sign, bucket ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+    grp = f"OVER ({part}ORDER BY sign, bucket ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"
+    qs = ", ".join(double_sql(q) for q in quantiles)
+    rank = "q * (total - 1)"
+    # KeyAtRank per (keys, q): the smallest bucket whose running count
+    # exceeds the store's rank, else the store's max bucket
+    pos_key = (
+        "coalesce(min(CASE WHEN sign = 1 AND cum > greatest("
+        f"{rank} - zero_count - neg_total, 0.0D) THEN bucket END),"
+        " max(CASE WHEN sign = 1 THEN bucket END))"
     )
-    is_neg = F.col("sign") == -1
-    is_zero = F.col("sign") == 0
-    is_pos = F.col("sign") == 1
-    # group-level totals as window aggregates over the SAME bins relation —
-    # a groupBy+join would re-scan the raw input a second time (the bins
-    # lineage recomputes); windows keep the plan single-scan, and the bins
-    # relation is tiny (groups x buckets) so the extra exchange is free
-    grp_w = Window.partitionBy(*keys)
-    bins2 = (
-        bins.withColumn("cum", F.sum("count").over(cum_w))
-        .withColumn(
-            "neg_total",
-            F.coalesce(F.sum(F.when(is_neg, F.col("count"))).over(grp_w), F.lit(0.0)),
-        )
-        .withColumn(
-            "zero_count",
-            F.coalesce(F.sum(F.when(is_zero, F.col("count"))).over(grp_w), F.lit(0.0)),
-        )
-        .withColumn("total", F.sum("count").over(grp_w))
-        .withColumn("max_pos_bucket", F.max(F.when(is_pos, F.col("bucket"))).over(grp_w))
-        .withColumn("max_neg_bucket", F.max(F.when(is_neg, F.col("bucket"))).over(grp_w))
+    neg_key = (
+        "coalesce(min(CASE WHEN sign = -1 AND cum > greatest("
+        f"neg_total - 1 - {rank}, 0.0D) THEN bucket END),"
+        " max(CASE WHEN sign = -1 THEN bucket END))"
     )
-
-    # literal quantile relation built JVM-side: createDataFrame would route
-    # through a Python RDD and spawn a python worker per core just to emit
-    # 3 rows (measured ~seconds at local[32])
-    qdf = spark.range(1).select(
-        F.explode(F.array(*[F.lit(q) for q in qs])).alias("q")
-    )
-    joined = bins2.join(F.broadcast(qdf))
-
-    rank = F.col("q") * (F.col("total") - 1)
-    neg_rank = F.greatest(F.col("neg_total") - 1 - rank, F.lit(0.0))
-    pos_rank = F.greatest(rank - F.col("zero_count") - F.col("neg_total"), F.lit(0.0))
-
-    picked = joined.groupBy(*keys, "q").agg(
-        F.min(F.when(is_pos & (F.col("cum") > pos_rank), F.col("bucket"))).alias("pos_key"),
-        F.min(F.when(is_neg & (F.col("cum") > neg_rank), F.col("bucket"))).alias("neg_key"),
-        F.first("neg_total").alias("neg_total"),
-        F.first("zero_count").alias("zero_count"),
-        F.first("total").alias("total"),
-        F.first("max_pos_bucket").alias("max_pos_bucket"),
-        F.first("max_neg_bucket").alias("max_neg_bucket"),
-    )
-
-    rank2 = F.col("q") * (F.col("total") - 1)
+    # the totals are constant per group: max() reads them
+    group_rank = "q * (max(total) - 1)"
     est = (
-        F.when(
-            rank2 < F.col("neg_total"),
-            -bucket_value(F.coalesce(F.col("neg_key"), F.col("max_neg_bucket")), mapping),
-        )
-        .when(rank2 < F.col("neg_total") + F.col("zero_count"), F.lit(0.0))
-        .otherwise(
-            bucket_value(F.coalesce(F.col("pos_key"), F.col("max_pos_bucket")), mapping)
-        )
+        f"CASE WHEN {group_rank} < max(neg_total) THEN -{bucket_value(neg_key, mapping)}"
+        f" WHEN {group_rank} < max(neg_total) + max(zero_count) THEN 0.0D"
+        f" ELSE {bucket_value(pos_key, mapping)} END"
     )
     if estimate_decimals is not None:
-        est = F.round(est, estimate_decimals)
-    return picked.select(*keys, "q", est.alias("est"))
+        est = f"round({est}, {int(estimate_decimals)})"
+    # each step is one projection of SQL text, parsed once by the JVM; the
+    # quantile explode gets its own projection AFTER the window (in the
+    # window's projection Spark plans the generator below it and the window
+    # would count every bin once per quantile), and the groupBy reuses the
+    # window's hash partitioning on the keys, so no exchange and no join
+    return (
+        bins.selectExpr(
+            *k,
+            "sign",
+            "bucket",
+            f"CASE sign WHEN 1 THEN sum(CASE WHEN sign = 1 THEN count END) {run}"
+            f" WHEN -1 THEN sum(CASE WHEN sign = -1 THEN count END) {run} END AS cum",
+            f"coalesce(sum(CASE WHEN sign = -1 THEN count END) {grp}, 0.0D) AS neg_total",
+            f"coalesce(sum(CASE WHEN sign = 0 THEN count END) {grp}, 0.0D) AS zero_count",
+            f"sum(count) {grp} AS total",
+        )
+        .selectExpr("*", f"explode(CAST(array({qs}) AS ARRAY<DOUBLE>)) AS q")
+        .groupBy(*k, "q")
+        .agg(F.expr(f"{est} AS est"))
+    )
 
 
 def ddsketch_quantiles_relational(
@@ -243,31 +237,29 @@ def summary_from_bins(
     (GetCount/GetSum/GetMinValue/GetMaxValue, ddsketch.go:208-267)."""
     config = config or DDSketchConfig()
     mapping = config.mapping()
-    is_pos = F.col("sign") == 1
-    is_neg = F.col("sign") == -1
-    signed_value = F.when(
-        is_pos, bucket_value(F.col("bucket"), mapping)
-    ).when(is_neg, -bucket_value(F.col("bucket"), mapping)).otherwise(F.lit(0.0))
+    has_zero = "CASE WHEN sum(CASE WHEN sign = 0 THEN count END) > 0 THEN 0.0D END"
+
+    def value_of(sign: int, agg: str) -> str:
+        return bucket_value(f"{agg}(CASE WHEN sign = {sign} THEN bucket END)", mapping)
+
     return bins.groupBy(*keys).agg(
-        F.sum("count").alias("count"),
-        F.round(F.sum(signed_value * F.col("count")), 6).alias("sum_approx"),
-        F.round(
-            F.coalesce(
-                -bucket_value(F.max(F.when(is_neg, F.col("bucket"))), mapping),
-                F.when(F.sum(F.when(F.col("sign") == 0, F.col("count"))) > 0, F.lit(0.0)),
-                bucket_value(F.min(F.when(is_pos, F.col("bucket"))), mapping),
-            ),
-            6,
-        ).alias("min_approx"),
-        F.round(
-            F.coalesce(
-                bucket_value(F.max(F.when(is_pos, F.col("bucket"))), mapping),
-                F.when(F.sum(F.when(F.col("sign") == 0, F.col("count"))) > 0, F.lit(0.0)),
-                -bucket_value(F.min(F.when(is_neg, F.col("bucket"))), mapping),
-            ),
-            6,
-        ).alias("max_approx"),
+        F.expr("sum(count) AS count"),
+        F.expr(f"round(sum({_signed_value_sql(mapping)} * count), 6) AS sum_approx"),
+        F.expr(
+            f"round(coalesce(-{value_of(-1, 'max')}, {has_zero}, {value_of(1, 'min')}), 6)"
+            " AS min_approx"
+        ),
+        F.expr(
+            f"round(coalesce({value_of(1, 'max')}, {has_zero}, -{value_of(-1, 'min')}), 6)"
+            " AS max_approx"
+        ),
     )
+
+
+def _signed_value_sql(mapping) -> str:
+    """SQL text of a bin row's signed representative value."""
+    val = bucket_value("bucket", mapping)
+    return f"CASE WHEN sign = 1 THEN {val} WHEN sign = -1 THEN -{val} ELSE 0.0D END"
 
 
 # =====================================================================
@@ -827,11 +819,7 @@ def winsorized_mean_from_bins(
     qs = quantiles_from_bins(bins, keys, (lo, hi), config)
     lo_rel = qs.where(F.col("q") == lo).select(*keys, F.col("est").alias("v_lo"))
     hi_rel = qs.where(F.col("q") == hi).select(*keys, F.col("est").alias("v_hi"))
-    is_pos = F.col("sign") == 1
-    is_neg = F.col("sign") == -1
-    sv = F.when(is_pos, bucket_value(F.col("bucket"), mapping)).when(
-        is_neg, -bucket_value(F.col("bucket"), mapping)
-    ).otherwise(F.lit(0.0))
+    sv = F.expr(_signed_value_sql(mapping))
     j = bins.join(F.broadcast(lo_rel), list(keys)).join(
         F.broadcast(hi_rel), list(keys)
     )

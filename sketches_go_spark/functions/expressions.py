@@ -20,6 +20,12 @@ of the three reference index mappings:
 Any other mapping type raises ``NotImplementedError`` instead of silently
 applying the wrong formula (round-2 verdict "What's wrong #1").
 
+The bucket inverse :func:`bucket_value` is Spark SQL *text*, not a Column:
+the relational quantile and summary paths embed it in whole SQL
+projections that the JVM parses once, where a Column tree costs one py4j
+round trip per node.  ``sign_bucket`` and ``bucket_index`` are Column
+builders, since their callers hand them a value Column.
+
 ``portable_hash64`` is a 60-bit MD5-derived hash whose exact value is
 reproducible in ANSI SQL on any engine (used so DuckDB oracles can replay
 hash-dependent operators bit-for-bit).  Production jobs that don't need
@@ -75,13 +81,9 @@ def exact_frexp(value: Column) -> tuple[Column, Column]:
     """
     v = value
     e0 = F.floor(F.log2(v))
-    p0 = F.pow(F.lit(2.0), e0)
-    e = (
-        F.when(v >= p0 * F.lit(2.0), e0 + F.lit(1.0))
-        .when(v < p0, e0 - F.lit(1.0))
-        .otherwise(e0)
-    )
-    s = v / F.pow(F.lit(2.0), e)
+    p0 = F.pow(2.0, e0)
+    e = F.when(v >= p0 * 2.0, e0 + 1.0).when(v < p0, e0 - 1.0).otherwise(e0)
+    s = v / F.pow(2.0, e)
     return e, s
 
 
@@ -89,15 +91,15 @@ def _approx_log2_linear_col(value: Column) -> Column:
     """Catalyst twin of core.mapping._approx_log2_linear: (e + s) - 1 with the
     same float-op grouping as the numpy path ((e-1) + 2m - 1)."""
     e, s = exact_frexp(value)
-    return (e + s) - F.lit(1.0)
+    return (e + s) - 1.0
 
 
 def _approx_log2_cubic_col(value: Column) -> Column:
     """Catalyst twin of CubicallyInterpolatedMapping._approx_log2: cubic
     polynomial of s-1 plus the exponent, identical op order to the core."""
     e, s = exact_frexp(value)
-    s1 = s - F.lit(1.0)  # exact: s in [1,2)
-    poly = ((F.lit(_A) * s1 + F.lit(_B)) * s1 + F.lit(_C)) * s1
+    s1 = s - 1.0  # exact: s in [1,2)
+    poly = ((F.lit(_A) * s1 + _B) * s1 + _C) * s1
     return poly + e
 
 
@@ -112,57 +114,78 @@ def bucket_index(value: Column, mapping: _BaseMapping) -> Column:
         approx = _approx_log2_cubic_col(value)
     else:
         raise _unsupported(mapping)
-    raw = approx * F.lit(mapping.multiplier) + F.lit(mapping.index_offset)
+    raw = approx * mapping.multiplier + mapping.index_offset
     return F.floor(raw).cast("int")
 
 
-def _lower_bound(bucket: Column, mapping: _BaseMapping) -> Column:
-    """Catalyst twin of mapping.lower_bound (value of the bucket's lower
-    edge).  For the interpolated mappings the inverse is built from the
-    (exponent, significand) decomposition: spo * 2**exponent, which equals
-    numpy's ldexp wherever the result is finite."""
-    x = (bucket.cast("double") - F.lit(mapping.index_offset)) / F.lit(
-        mapping.multiplier
+def double_sql(x: float) -> str:
+    """A DOUBLE literal in Spark SQL text: the shortest repr round-trips to
+    the same IEEE double, and the ``D`` suffix keeps it a double (a bare
+    ``1.01`` parses as DECIMAL)."""
+    return f"({float(x)!r}D)"
+
+
+def name_sql(name: str) -> str:
+    """A column name quoted for Spark SQL text (backticks, any inner
+    backtick doubled)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def bucket_value(bucket: str, mapping: _BaseMapping) -> str:
+    """Spark SQL text of a bucket's representative value,
+    lower_bound(i) * (1 + alpha), for the bucket index expression
+    ``bucket`` (a column name or any SQL expression, aggregates included).
+
+    Catalyst twin of mapping.value.  For the interpolated mappings the
+    inverse is built from the (exponent, significand) decomposition:
+    spo * 2**exponent, which equals numpy's ldexp wherever the result is
+    finite.  Written as text so the JVM parses the whole expression once
+    instead of taking one py4j call per Column node."""
+    x = (
+        f"((CAST({bucket} AS DOUBLE) - {double_sql(mapping.index_offset)})"
+        f" / {double_sql(mapping.multiplier)})"
     )
     if isinstance(mapping, LogarithmicMapping):
-        return F.exp(x)
-    if isinstance(mapping, LinearlyInterpolatedMapping):
-        e = F.floor(x)
-        spo = x - e + F.lit(1.0)
-        return spo * F.pow(F.lit(2.0), e)
-    if isinstance(mapping, CubicallyInterpolatedMapping):
-        e = F.floor(x)
-        frac = x - e
-        d1 = F.lit(_K_D1_CONST) - F.lit(_K_D1_FRAC) * frac
-        p = F.cbrt((d1 - F.sqrt(d1 * d1 - F.lit(_K_4D03))) / F.lit(2.0))
-        spo = (-((F.lit(_B) + p) + F.lit(_D0) / p)) / F.lit(_K_3A) + F.lit(1.0)
-        return spo * F.pow(F.lit(2.0), e)
-    raise _unsupported(mapping)
-
-
-def bucket_value(bucket: Column, mapping: _BaseMapping) -> Column:
-    """Representative value of a bucket: lower_bound(i) * (1 + alpha)."""
-    return _lower_bound(bucket, mapping) * F.lit(1.0 + mapping.relative_accuracy())
+        lower = f"exp({x})"
+    elif isinstance(mapping, LinearlyInterpolatedMapping):
+        e = f"floor({x})"
+        lower = f"((({x} - {e}) + 1.0D) * power(2.0D, {e}))"
+    elif isinstance(mapping, CubicallyInterpolatedMapping):
+        e = f"floor({x})"
+        frac = f"({x} - {e})"
+        d1 = f"({double_sql(_K_D1_CONST)} - {double_sql(_K_D1_FRAC)} * {frac})"
+        p = f"cbrt(({d1} - sqrt({d1} * {d1} - {double_sql(_K_4D03)})) / 2.0D)"
+        spo = (
+            f"((-(({double_sql(_B)} + {p}) + {double_sql(_D0)} / {p}))"
+            f" / {double_sql(_K_3A)} + 1.0D)"
+        )
+        lower = f"({spo} * power(2.0D, {e}))"
+    else:
+        raise _unsupported(mapping)
+    return f"({lower} * {double_sql(1.0 + mapping.relative_accuracy())})"
 
 
 def sign_bucket(value: Column, mapping: _BaseMapping) -> tuple[Column, Column]:
     """3-way value routing (ddsketch.go:124-145): returns (sign, bucket) where
     sign is +1 / -1 / 0 and bucket is the index within that sign's store
     (0 for the zero region).  NaN and out-of-range values map to sign NULL so
-    they can be counted as rejected rather than silently dropped."""
+    they can be counted as rejected rather than silently dropped.
+
+    Literals go to the Column operators as Python floats, which costs no
+    py4j round trip of its own (an ``F.lit`` or other ``F.*`` call costs
+    several); building this tree is most of the cost of constructing a
+    relational query's DataFrame."""
     v = value.cast("double")
-    min_i = F.lit(mapping.min_indexable)
-    max_i = F.lit(mapping.max_indexable)
-    sign = (
-        F.when(v.isNull() | F.isnan(v) | (v > max_i) | (v < -max_i), F.lit(None).cast("int"))
-        .when(v > min_i, F.lit(1))
-        .when(v < -min_i, F.lit(-1))
-        .otherwise(F.lit(0))
-    )
+    lo, hi = mapping.min_indexable, mapping.max_indexable
+    # NaN compares greater than every double and NULL compares to nothing,
+    # so neither satisfies any of the three ranges: no branch, sign NULL
+    is_pos = (v > lo) & (v <= hi)
+    is_neg = (v < -lo) & (v >= -hi)
+    sign = F.when(is_pos, 1).when(is_neg, -1).when(F.abs(v) <= lo, 0)
     bucket = (
-        F.when(sign == 1, bucket_index(v, mapping))
-        .when(sign == -1, bucket_index(-v, mapping))
-        .otherwise(F.lit(0))
+        F.when(is_pos, bucket_index(v, mapping))
+        .when(is_neg, bucket_index(-v, mapping))
+        .otherwise(0)
     )
     return sign, bucket
 

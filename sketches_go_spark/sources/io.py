@@ -16,6 +16,7 @@ the 100 TB scan happens once; consumers query the blobs.
 
 from __future__ import annotations
 
+import json
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -107,8 +108,46 @@ def write_sketches(
 
 
 def read_sketches(spark: SparkSession, path: str) -> DataFrame:
-    """Read a persisted sketch relation back (decode-ready blobs)."""
-    return spark.read.parquet(path)
+    """Read a persisted sketch relation back (decode-ready blobs).
+
+    The schema is the one Spark's parquet writer stored in the footer of
+    the store's first top-level ``part-*`` file, read on the driver;
+    schema inference would launch a Spark job per read just to read that
+    footer.  Inference stays the fallback where there is no such
+    file or key (partitioned stores, parquet written by another engine)."""
+    schema = _stored_spark_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+#: footer key under which Spark's parquet writer stores the row schema JSON
+_SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
+
+
+def _stored_spark_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The Spark schema in the footer of the first top-level ``part-*``
+    file under ``path``, or None if there is no such file or key."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    parts = root.getFileSystem(conf).globStatus(
+        jvm.org.apache.hadoop.fs.Path(root, "part-*")
+    )
+    files = sorted(s.getPath().toString() for s in parts or () if s.isFile())
+    if not files:
+        return None
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            jvm.org.apache.hadoop.fs.Path(files[0]), conf
+        )
+    )
+    try:
+        stored = reader.getFooter().getFileMetaData().getKeyValueMetaData().get(
+            _SPARK_SCHEMA_KEY
+        )
+    finally:
+        reader.close()
+    return None if stored is None else StructType.fromJson(json.loads(stored))
 
 
 #: schema of one assembled-example JSONL line

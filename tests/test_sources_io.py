@@ -64,6 +64,34 @@ def test_sketch_sink_roundtrip(spark, tmp_path):
     assert "PartitionFilters: [isnotnull(role" in plan or "role#" in plan
 
 
+@pytest.mark.parametrize("partition_by", [(), ("role",)], ids=["flat", "partitioned"])
+def test_read_sketches_schema_equals_inferred(spark, tmp_path, partition_by):
+    """read_sketches takes a flat store's schema from its first part file's
+    footer without a Spark job, falls back to inference for a partitioned
+    one, and either way reads the schema and rows inference gives."""
+    t = transcripts_from_events(spark, SF_SMOKE)
+    src = t.select("role", "tool", F.length("text").cast("double").alias("v"))
+    stores = {
+        "sketch": dd.ddsketch_agg(src, "v", ["role", "tool"], CFG),
+        "bins": dd.build_bins(src, "v", ["role", "tool"], CFG),
+    }
+    sc = spark.sparkContext
+    for kind, df in stores.items():
+        path = str(tmp_path / kind)
+        sio.write_sketches(df, path, partition_by=partition_by)
+        group = f"read_sketches-{kind}-{len(partition_by)}"
+        sc.setJobGroup(group, "schema of a stored sketch relation")
+        try:
+            back = sio.read_sketches(spark, path)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert (len(jobs) > 0) == bool(partition_by), kind
+        inferred = spark.read.parquet(path)
+        assert back.schema == inferred.schema, kind
+        assert sorted(map(repr, back.collect())) == sorted(map(repr, inferred.collect())), kind
+
+
 def test_csv_roundtrip_hostile_text(spark, tmp_path):
     """Transcript text containing commas, quotes, newlines and unicode must
     survive the CSV round trip byte-for-byte (RFC-4180 quoting + multiLine)."""

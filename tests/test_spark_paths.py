@@ -2,6 +2,8 @@
 DDSketch object, partition-order invariance (north-rule merge contract), and
 plan checks (the relational hot path must stay Python-free)."""
 
+import math
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -9,6 +11,7 @@ from pyspark.sql import functions as F
 
 from sketches_go_spark.core.ddsketch import DDSketch, DDSketchConfig
 from sketches_go_spark.functions import ddsketch_fns as dd
+from sketches_go_spark.sources import io as sio
 from tests.oracle import assert_relatively_accurate
 
 CFG = DDSketchConfig(alpha=0.01)
@@ -35,18 +38,75 @@ def sdf(spark, data):
     return spark.createDataFrame(data).repartition(8)
 
 
-def test_relational_accuracy_and_core_parity(spark, sdf, data):
-    out = dd.ddsketch_quantiles_relational(
-        sdf, "v", ["g"], QS, CFG
-    ).toPandas().set_index(["g", "q"])["est"]
-    for g, sub in data.groupby("g"):
+# Key columns of a parity case, derived from the fixture's "g" as Spark SQL,
+# and the fixture group an output key tuple stands for (None: no keys).
+KEYINGS = {
+    "string": (["g"], {}, lambda k: k[0]),
+    "double": (
+        ["d"],
+        {"d": "CASE g WHEN 'a' THEN NULL WHEN 'b' THEN double('NaN') ELSE 1.5D END"},
+        lambda k: "a" if k[0] is None else "b" if math.isnan(k[0]) else "c",
+    ),
+    "quoted": (["conv id"], {"conv id": "concat('c ', g)"}, lambda k: k[0][2:]),
+    "none": ([], {}, lambda k: None),
+}
+PARITY_CASES = {
+    "default": {},
+    "weighted": {"weighted": True},
+    "double-null-nan-key": {"keying": "double"},
+    "no-keys": {"keying": "none"},
+    "quoted-key": {"keying": "quoted"},
+    "no-quantiles": {"qs": ()},
+    "raw-estimates": {"decimals": None},
+    "linear": {"cfg": DDSketchConfig(alpha=0.01, interpolation="linear")},
+    "cubic": {"cfg": DDSketchConfig(alpha=0.01, interpolation="cubic"), "weighted": True},
+    "collapse-lowest": {
+        "cfg": DDSketchConfig(alpha=0.01, max_bins=64, collapse="lowest"),
+        "weighted": True,
+    },
+    "collapse-highest": {"cfg": DDSketchConfig(alpha=0.01, max_bins=64, collapse="highest")},
+}
+
+
+@pytest.mark.parametrize("case", PARITY_CASES)
+def test_relational_accuracy_and_core_parity(spark, sdf, data, case):
+    """Per-group estimates equal the numpy core's at 6 decimals (and are
+    alpha-accurate where unweighted and uncollapsed) for every group and
+    quantile asked, over values of all three signs."""
+    opts = PARITY_CASES[case]
+    cfg = opts.get("cfg", CFG)
+    qs = opts.get("qs", [0.0, *QS])
+    decimals = opts.get("decimals", 6)
+    keys, derived, group_of = KEYINGS[opts.get("keying", "string")]
+    weights = (
+        np.random.default_rng(3).uniform(0.1, 3.0, len(data))
+        if opts.get("weighted")
+        else None
+    )
+    df = sdf if weights is None else spark.createDataFrame(data.assign(w=weights)).repartition(8)
+    df = df.selectExpr("*", *[f"{sql} AS `{name}`" for name, sql in derived.items()])
+    wcol = None if weights is None else "w"
+    if decimals == 6:
+        out = dd.ddsketch_quantiles_relational(df, "v", keys, qs, cfg, wcol)
+    else:
+        bins = dd.build_bins(df, "v", keys, cfg, wcol)
+        out = dd.quantiles_from_bins(bins, keys, qs, cfg, estimate_decimals=decimals)
+    got = {(group_of([r[k] for k in keys]), r["q"]): r["est"] for r in out.collect()}
+    groups = dict(iter(data.groupby("g"))) if keys else {None: data}
+    assert set(got) == {(g, q) for g in groups for q in qs}
+    for g, sub in groups.items():
         vals = sub["v"].to_numpy()
-        core = DDSketch.from_values(vals, config=CFG)
-        for q in QS:
-            est = out.loc[(g, q)]
-            assert_relatively_accurate(vals, est, q, 0.01)
+        core = DDSketch.from_values(
+            vals, None if weights is None else weights[sub.index], config=cfg
+        )
+        for q in qs:
+            est = got[(g, q)]
             # parity with the numpy core (same algorithm, same buckets)
-            assert est == pytest.approx(core.quantile(q), rel=1e-9, abs=1e-6)
+            assert round(est, 6) == round(core.quantile(q), 6), (g, q)
+            if decimals is None:
+                assert est == pytest.approx(core.quantile(q), rel=1e-12)
+            if weights is None and cfg.collapse == "none":
+                assert_relatively_accurate(vals, est, q, cfg.alpha)
 
 
 def test_udaf_matches_relational(spark, sdf, data):
@@ -109,12 +169,37 @@ def test_nan_and_null_rejected_not_counted(spark):
     assert bins.agg(F.sum("count")).collect()[0][0] == 2.0
 
 
-def test_relational_plan_is_python_free(spark, sdf):
-    """The hot path must compile to JVM codegen — no Python eval nodes."""
-    plan = dd.ddsketch_quantiles_relational(sdf, "v", ["g"], QS, CFG)._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
-    assert "FlatMapGroupsInPandas" not in plan
+def _shape(df) -> dict:
+    """Node counts of the executed plan (under AQE the initial plan:
+    nothing runs), one node per line once the tree prefix is stripped."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    nodes = [line.lstrip(" :|+-") for line in plan.splitlines()]
+    return {
+        "hash_exchanges": sum(n.startswith("Exchange hashpartitioning") for n in nodes),
+        "windows": sum(n.startswith("Window ") for n in nodes),
+        "joins": sum(n.split(" ")[0].endswith("Join") for n in nodes),
+        "broadcasts": sum(n.startswith("BroadcastExchange") for n in nodes),
+        "python": [n for n in nodes if "Python" in n.split(" ")[0] or "Pandas" in n.split(" ")[0]],
+    }
+
+
+def test_relational_plan_is_python_free(spark, sdf, tmp_path):
+    """The hot path must compile to JVM codegen (no Python eval nodes), in
+    one window over the bins and no join: one exchange for the bins (or the
+    rollup) on (keys, sign, bucket), one for the window on the keys, and
+    the per-quantile groupBy reuses the window's partitioning."""
+    path = str(tmp_path / "bins")
+    sio.write_sketches(dd.build_bins(sdf.withColumn("h", F.col("g")), "v", ["g", "h"], CFG), path)
+    rolled = dd.rollup_bins(sio.read_sketches(spark, path), ["g", "h"], ["g"])
+    want = {"hash_exchanges": 2, "windows": 1, "joins": 0, "broadcasts": 0, "python": []}
+    assert _shape(dd.ddsketch_quantiles_relational(sdf, "v", ["g"], QS, CFG)) == want
+    assert _shape(dd.quantiles_from_bins(rolled, ["g"], QS, CFG)) == want
+    # a DOUBLE key costs one more exchange: Spark partitions the window by
+    # the NaN/-0.0-normalized key but the groupBy by the raw key, so the
+    # window's partitioning does not satisfy the aggregate
+    dkey = sdf.selectExpr("v", "CASE g WHEN 'a' THEN double('NaN') ELSE 1.5D END AS d")
+    got = _shape(dd.ddsketch_quantiles_relational(dkey, "v", ["d"], QS, CFG))
+    assert got == {**want, "hash_exchanges": 3}
 
 
 def test_collapsed_relational_invariants(spark):
