@@ -369,7 +369,12 @@ def _blob_buffers(blobs: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]
 
 
 def _sketch_rows(
-    frame: pd.DataFrame, starts: np.ndarray, kcols: Sequence[str], data: np.ndarray, offsets: np.ndarray
+    frame: pd.DataFrame,
+    starts: np.ndarray,
+    kcols: Sequence[str],
+    data: np.ndarray,
+    offsets: np.ndarray,
+    out_col: str = "sketch",
 ) -> pd.DataFrame:
     """(keys..., sketch) rows: the key of each run start and its blob, the
     blobs given as one byte buffer and its int64 offsets."""
@@ -377,7 +382,7 @@ def _sketch_rows(
         pa.large_binary(), starts.size, [None, pa.py_buffer(offsets), pa.py_buffer(data)]
     )
     out = _key_frame(frame, kcols, starts)
-    out["sketch"] = blobs.to_numpy(zero_copy_only=False)
+    out[out_col] = blobs.to_numpy(zero_copy_only=False)
     return out
 
 

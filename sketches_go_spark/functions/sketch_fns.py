@@ -10,9 +10,15 @@ t-digest) — same two-path design as DDSketch:
   scatter (:func:`_serialize_runs`), so a blob is the relation, never a
   second build of its monoid;
 - **rank sketches** (KLL, t-digest) have no relational form and build as
-  partial-per-partition → shuffle of tiny blobs → streaming merge
-  (:func:`two_phase_agg`); :func:`two_phase_merge` also merges stored
-  blobs of any of these sketches.
+  partial blobs → one exchange of the partials on the key → a streaming
+  merge of each key run (:func:`two_phase_merge`, which also merges stored
+  blobs of any of these sketches).  KLL works a batch at a time
+  (``core.kll.KLLBatch``): :func:`kll_agg` writes one partial per group
+  of each Arrow batch (a group with at most k values in the batch is its
+  values sorted, one lexsort for all such groups), and the merge and
+  :func:`sketch_quantiles_udf` take a frame of blobs at once.  t-digest
+  keeps one object per group (:func:`two_phase_agg`) and one decode per
+  blob.
 """
 
 from __future__ import annotations
@@ -37,9 +43,10 @@ from sketches_go_spark.core.bloom import bloom_salt
 from sketches_go_spark.core.cms import cms_salt
 from sketches_go_spark.core.hashing import HASH_BITS
 from sketches_go_spark.core.hll import HyperLogLog, hll_alpha
-from sketches_go_spark.core.kll import KLLSketch
+from sketches_go_spark.core.kll import KLLBatch, KLLSketch
 from sketches_go_spark.core.tdigest import TDigest
 from sketches_go_spark.functions.ddsketch_fns import (
+    _blob_buffers,
     _group_cols,
     _key_frame,
     _run_starts,
@@ -99,9 +106,9 @@ def _serialize_runs(
     )
 
 
-# Distinct groups a two_phase_agg partial build holds before it emits them
-# as partial blobs (the merge stage folds a group's several partials), so a
-# task's memory is bounded whatever the key cardinality.
+# Distinct groups a two_phase_agg (t-digest) partial build holds before it
+# emits them as partial blobs (the merge stage folds a group's several
+# partials), so a task's memory is bounded whatever the key cardinality.
 _FLUSH_GROUPS = 50_000
 
 
@@ -114,11 +121,11 @@ def two_phase_agg(
     decode: Callable[[bytes], object],
     out_col: str = "sketch",
 ) -> DataFrame:
-    """Shared topology for mergeable sketches whose partial build is a
-    per-group object update (KLL / t-digest — rank sketches with
-    order-sensitive internal state and no relational form).  HLL / CMS /
-    Bloom serialize their Catalyst relations instead (:func:`_serialize_runs`).
-    Sketch objects must expose ``.merge()`` and ``.to_bytes()``.
+    """Two-phase topology for a sketch whose partial build is a per-group
+    object update; t-digest is the one such sketch left (HLL / CMS / Bloom
+    serialize their Catalyst relations, :func:`_serialize_runs`; KLL builds
+    by the batch, :func:`kll_agg`).  Sketch objects must expose
+    ``.merge()`` and ``.to_bytes()``.
 
     One partial sketch per (group x input partition) is built batch-wise in
     mapInPandas (map-side combine); the tiny encoded partials shuffle on
@@ -165,6 +172,13 @@ def two_phase_agg(
     return two_phase_merge(partials, keys, decode, out_col)
 
 
+def _batch_codec(decode: Callable[[bytes], object]):
+    """The columnar class of the blobs ``decode`` reads, or None.  The one
+    place that routes KLL blobs (``KLLSketch.from_bytes``) to the batch
+    merge and quantiles; other sketches decode one blob per row."""
+    return KLLBatch if decode == KLLSketch.from_bytes else None
+
+
 def two_phase_merge(
     partials: DataFrame,
     keys: Sequence[str],
@@ -174,15 +188,21 @@ def two_phase_merge(
     """Shared merge stage: shuffle the encoded partials by group key, sort
     within partitions, and fold each key run (``ddsketch_fns._whole_runs``)
     in one streaming mapInPandas pass — the same shape as
-    ``ddsketch_fns.ddsketch_merge``, one Python decode per partial row
-    rather than applyInPandas' ~1 ms per-group call."""
+    ``ddsketch_fns.ddsketch_merge``.  KLL frames merge at once
+    (``KLLBatch.merge_runs``, byte for byte the core merge loop); other
+    sketches take one Python decode per partial row."""
     kcols = list(keys)
     key_fields = [partials.schema[k] for k in kcols]
     out_schema = StructType(list(key_fields) + [StructField(out_col, BinaryType())])
+    batch = _batch_codec(decode)
 
     def merge_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for frame in _whole_runs(batches, kcols):
             starts = _run_starts(frame, kcols)
+            if batch is not None:
+                merged = batch.from_blobs(*_blob_buffers(frame[out_col])).merge_runs(starts)
+                yield _sketch_rows(frame, starts, kcols, *merged.encode(), out_col=out_col)
+                continue
             blobs = frame[out_col].to_numpy()
             merged = []
             for a, b in zip(starts, np.append(starts[1:], len(frame))):
@@ -669,17 +689,34 @@ def kll_agg(
     keys: Sequence[str],
     k: int = 200,
 ) -> DataFrame:
-    def add(sk: KLLSketch, cols: dict) -> None:
-        sk.add(np.asarray(cols[value_col], dtype=np.float64))
+    """(keys..., sketch) KLL blobs, ``KLLSketch(k).to_bytes()`` of each
+    group's non-null, non-NaN values.
 
-    return two_phase_agg(
-        df.where(_col(value_col).isNotNull()),
-        [value_col],
-        keys,
-        lambda: KLLSketch(k),
-        add,
-        KLLSketch.from_bytes,
-    )
+    Each input Arrow batch becomes one partial blob per group it holds
+    (``KLLBatch.from_values``: one lexsort for the groups with at most k
+    values in the batch, a ``KLLSketch`` for each larger one).  Nothing is
+    kept across batches, so a task holds one batch and the sketches built
+    from it, whatever the key cardinality.  The partials exchange on the
+    key and :func:`two_phase_merge` folds each key run.  A group of at most
+    k values never compacts: its blob is its values sorted, the same under
+    any partitioning."""
+    kcols = list(keys)
+    out_schema = StructType([df.schema[c] for c in kcols] + [StructField("sketch", BinaryType())])
+    source = _with_null_flags(df.where(_col(value_col).isNotNull()).select(*kcols, value_col), kcols)
+    gcols = _group_cols(source.columns, kcols)
+
+    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            group = pdf.groupby(gcols, dropna=False, sort=False).ngroup().to_numpy()
+            first = np.unique(group, return_index=True)[1]
+            values = pdf[value_col].to_numpy(dtype=np.float64)
+            blobs = KLLBatch.from_values(values, group, first.size, k).encode()
+            yield _sketch_rows(pdf, first, kcols, *blobs)
+
+    partials = source.mapInPandas(build, schema=out_schema)
+    return two_phase_merge(partials, keys, KLLSketch.from_bytes)
 
 
 def tdigest_agg(
@@ -704,16 +741,27 @@ def tdigest_agg(
 def sketch_quantiles_udf(
     decode: Callable[[bytes], object], quantiles: Sequence[float]
 ) -> Callable[[Column], Column]:
+    """Column function: each blob's quantiles as array<double>, null for a
+    null blob and NaN for an empty sketch.  KLL blobs are answered a batch
+    at a time (``KLLBatch.quantiles``, value for value
+    ``KLLSketch.quantiles``); other sketches decode one blob per row."""
     qs = [float(q) for q in quantiles]
+    batch = _batch_codec(decode)
+    empty = [float("nan")] * len(qs)
 
     @F.pandas_udf(ArrayType(DoubleType()))
     def extract(blobs: pd.Series) -> pd.Series:
+        if batch is not None:
+            data, offsets, valid = _blob_buffers(blobs)
+            rows = batch.from_blobs(data, offsets, valid).quantiles(qs).tolist()
+            return pd.Series([r if ok else None for r, ok in zip(rows, valid)])
         out = []
         for b in blobs:
             if b is None:
                 out.append(None)
                 continue
-            out.append([float(x) for x in decode(bytes(b)).quantiles(qs)])
+            s = decode(bytes(b))
+            out.append([float(x) for x in s.quantiles(qs)] if s.n else empty)
         return pd.Series(out)
 
     return extract

@@ -3,7 +3,10 @@ serde round-trips.  HLL: sigma=1.04/sqrt(m); CMS: overshoot <= eps*N w.h.p.,
 never undershoot; Bloom: no false negatives, FPR near (1-e^{-kn/m})^k;
 KLL: additive rank error; t-digest: tail-accurate rank error."""
 
+import struct
+
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -11,7 +14,7 @@ from sketches_go_spark.core.bloom import BloomFilter, optimal_k
 from sketches_go_spark.core.cms import CountMinSketch
 from sketches_go_spark.core.hashing import bit_length_u64, portable_hash64_np
 from sketches_go_spark.core.hll import HyperLogLog
-from sketches_go_spark.core.kll import KLLSketch
+from sketches_go_spark.core.kll import KLLBatch, KLLSketch
 from sketches_go_spark.core.tdigest import TDigest
 
 RNG = np.random.default_rng(5)
@@ -134,6 +137,153 @@ def test_kll_merge_and_serde():
     assert np.array_equal(rt.quantiles([0.1, 0.5, 0.9]), merged.quantiles([0.1, 0.5, 0.9]))
     with pytest.raises(ValueError):
         merged.merge(KLLSketch(100))
+
+
+def _max_rank_err(sk: KLLSketch, exact: np.ndarray) -> float:
+    """Worst rank error over percentiles 1-99: how far each estimate's
+    positions among the sorted exact values lie from the exact lower/upper
+    quantile's, as a fraction of n."""
+    grid = np.arange(1, 100) / 100
+    rank = grid * (exact.size - 1)
+    est = sk.quantiles(grid)
+    first = np.searchsorted(exact, est, side="left")
+    last = np.searchsorted(exact, est, side="right") - 1
+    return float(np.maximum(np.maximum(first - np.ceil(rank), np.floor(rank) - last), 0).max()) / exact.size
+
+
+@pytest.fixture(scope="module", params=[0, 1], ids=["seed0", "seed1"])
+def lognormal_1e6(request):
+    values = np.random.default_rng(request.param).lognormal(0, 1, 10**6)
+    return values, np.sort(values)
+
+
+def _feed(values: np.ndarray, step: int) -> KLLSketch:
+    sk = KLLSketch(200)
+    for i in range(0, values.size, step):
+        sk.add(values[i : i + step])
+    return sk
+
+
+@pytest.mark.parametrize("order", ["add_1000", "add_97", "merge_1000_partials", "sorted", "reverse_sorted"])
+def test_kll_rank_error_within_eps_under_many_compactions(lognormal_1e6, order):
+    """10^6 values through thousands of compactions stay within eps = 2/k
+    over percentiles 1-99.  Random order fed in small pieces, or as many
+    merged partials, is the hard case for deterministic compaction offsets:
+    with one offset shared by all levels, a level can get the same parity
+    every time and its error adds up (1.5-1.9 eps at k=200); one offset per
+    level keeps these cases under 0.9 eps.  Sorted and reverse-sorted input
+    stays under 0.5 eps either way."""
+    values, exact = lognormal_1e6
+    if order == "add_1000":
+        sk = _feed(values, 1000)
+    elif order == "add_97":
+        sk = _feed(values, 97)
+    elif order == "merge_1000_partials":
+        sk = KLLSketch(200)
+        for part in np.split(values, 1000):
+            sk.merge(KLLSketch(200).add(part))
+    else:
+        sk = _feed(exact if order == "sorted" else exact[::-1], 1000)
+    assert sk.n == values.size
+    assert _max_rank_err(sk, exact) <= sk.epsilon
+
+
+def test_kll_level0_sorted_and_old_blobs_read():
+    """Level 0 stays sorted through adds and merges, so a sketch that never
+    compacted is the same blob for any order of its values; a blob written
+    with level 0 in arrival order still decodes and answers the same
+    quantiles."""
+    v = RNG.normal(size=150)
+    a = KLLSketch(200).add(v)
+    b = KLLSketch(200).add(v[::-1][:70]).merge(KLLSketch(200).add(v[::-1][70:]))
+    assert np.array_equal(a.levels[0], np.sort(v))
+    assert a.to_bytes() == b.to_bytes()
+    old = struct.pack("<IQddII", 200, v.size, v.min(), v.max(), 1, v.size) + v.tobytes()
+    rt = KLLSketch.from_bytes(old)
+    assert rt.to_bytes() == old
+    qs = [0.0, 0.3, 0.5, 0.99, 1.0]
+    assert np.array_equal(rt.quantiles(qs), a.quantiles(qs))
+
+
+def _kll_corpus(rng, k: int) -> list:
+    """Sketches at k: empty, NaN-only, one value, exactly k and k+1 values,
+    NaN among values, random small ones, and multi-level ones up to a
+    level-10 weight."""
+    out = [KLLSketch(k), KLLSketch(k).add([np.nan, np.nan]), KLLSketch(k).add([3.25]),
+           KLLSketch(k).add(rng.normal(size=k)), KLLSketch(k).add(rng.normal(size=k + 1)),
+           KLLSketch(k).add(np.where(rng.random(40) < 0.3, np.nan, rng.normal(size=40)))]
+    out += [KLLSketch(k).add(rng.lognormal(size=rng.integers(0, 3 * k))) for _ in range(30)]
+    for n in (5 * k, 60 * k, 3000 * k):
+        sk = KLLSketch(k)
+        for part in np.array_split(rng.normal(size=n), 7):
+            sk.merge(KLLSketch(k).add(part))
+        out.append(sk)
+    assert max(len(s.levels) for s in out) > 10
+    return out
+
+
+def _blob_batch(blobs: list) -> KLLBatch:
+    arr = pa.array(blobs, type=pa.large_binary())
+    _, offsets, data = arr.buffers()
+    return KLLBatch.from_blobs(
+        np.frombuffer(data, dtype=np.uint8),
+        np.frombuffer(offsets, dtype=np.int64),
+        ~arr.is_null().to_numpy(zero_copy_only=False),
+    )
+
+
+def _blob(data: np.ndarray, offsets: np.ndarray, i: int) -> bytes:
+    return bytes(data[offsets[i] : offsets[i + 1]])
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_kll_batch_matches_core(seed):
+    """KLLBatch against KLLSketch over a randomized corpus: decode then
+    encode gives the same bytes, merge_runs the bytes of the core merge
+    loop (runs of one, exact runs of at most k items, runs that compact,
+    shuffled order), from_values the bytes of one KLLSketch per group, and
+    quantiles the core's value for value (NaN for empty or null)."""
+    rng = np.random.default_rng(seed)
+    k = 16
+    sketches = _kll_corpus(rng, k)
+    rng.shuffle(sketches)
+    blobs = [s.to_bytes() for s in sketches]
+    blobs.insert(5, None)
+    batch = _blob_batch(blobs)
+    data, offsets = batch.encode()
+    for i, b in enumerate(blobs):
+        assert _blob(data, offsets, i) == (b or b"")
+
+    qs = [0.0, 0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99, 1.0]
+    got = batch.quantiles(qs)
+    for i, b in enumerate(blobs):
+        s = None if b is None else KLLSketch.from_bytes(b)
+        if s is None or s.n == 0:
+            assert np.isnan(got[i]).all()
+        else:
+            assert np.array_equal(got[i], s.quantiles(qs))
+
+    with pytest.raises(ValueError):
+        batch.merge_runs(np.array([0]))
+    live = [b for b in blobs if b is not None]
+    small = [KLLSketch(k).add(rng.normal(size=rng.integers(0, 6))).to_bytes() for _ in range(40)]
+    live = small[:20] + live + small[20:]
+    cuts = np.sort(rng.choice(np.arange(1, len(live)), size=len(live) // 3, replace=False))
+    starts = np.concatenate([[0], cuts])
+    data, offsets = _blob_batch(live).merge_runs(starts).encode()
+    for r, (a, e) in enumerate(zip(starts, np.append(cuts, len(live)))):
+        s = KLLSketch.from_bytes(live[a])
+        for b in live[a + 1 : e]:
+            s.merge(KLLSketch.from_bytes(b))
+        assert _blob(data, offsets, r) == s.to_bytes()
+
+    values = rng.lognormal(size=4000)
+    values[rng.random(values.size) < 0.05] = np.nan
+    group = rng.integers(0, 400, values.size)
+    group[group % 97 == 0] = 1  # one group over k; some groups left empty
+    data, offsets = KLLBatch.from_values(values, group, 410, k).encode()
+    for g in range(410):
+        assert _blob(data, offsets, g) == KLLSketch(k).add(values[group == g]).to_bytes()
 
 
 def test_tdigest_tail_accuracy():

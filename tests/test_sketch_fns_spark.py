@@ -150,12 +150,67 @@ def test_kll_tdigest_spark_accuracy(spark):
         assert abs(rank - q) <= tol
 
 
+def test_kll_agg_exact_blobs_independent_of_partitioning(spark):
+    """A group of at most k values never compacts, so its kll_agg blob is
+    ``KLLSketch(k).add(values).to_bytes()`` (level 0 sorted) whatever the
+    partitioning: 3 partitions with whole Arrow batches and 7 with 97-row
+    ones give the same bytes.  NaN values are dropped, an all-NaN group
+    keeps an empty sketch, and the null key is one group; the group of
+    k+1 values compacts, so only its count is checked."""
+    rng = np.random.default_rng(31)
+    k = 64
+    sizes = rng.integers(1, k + 1, 300)
+    sizes[:3] = (1, k, k + 1)
+    g = np.repeat(np.arange(300).astype(str), sizes).astype(object)
+    v = rng.lognormal(0, 1, g.size)
+    v[rng.choice(np.flatnonzero(g != "2"), 300, replace=False)] = np.nan
+    g[g == "7"] = None
+    only_nan = g == "8"
+    g[only_nan], v[only_nan] = "nan-only", np.nan
+    order = rng.permutation(g.size)
+    pdf = pd.DataFrame({"g": g[order], "v": v[order]})
+    # pandas' NaN reaches Spark as null: set the NaN values in Spark
+    sdf = spark.createDataFrame(pdf.assign(nan=pdf["v"].isna(), v=pdf["v"].fillna(0.0))).select(
+        "g", F.when(F.col("nan"), F.lit(float("nan"))).otherwise(F.col("v")).alias("v")
+    )
+    want = {
+        (None if pd.isna(key) else key): KLLSketch(k).add(sub["v"].to_numpy()).to_bytes()
+        for key, sub in pdf.groupby("g", dropna=False)
+    }
+    whole = {r["g"]: bytes(r["sketch"]) for r in sk.kll_agg(sdf.repartition(3), "v", ["g"], k=k).collect()}
+    small = _blobs_by_key(spark, sk.kll_agg(sdf.repartition(7), "v", ["g"], k=k))
+    assert len(want) == len(whole) == len(small) == 300
+    assert KLLSketch.from_bytes(want["nan-only"]).n == 0 and None in want
+    over = [key for key, blob in want.items() if KLLSketch.from_bytes(blob).n > k]
+    assert over == ["2"]
+    assert KLLSketch.from_bytes(whole["2"]).n == KLLSketch.from_bytes(small["2"]).n == k + 1
+    for key in want.keys() - set(over):
+        assert whole[key] == small[key] == want[key], key
+
+
+@pytest.mark.parametrize("kind", ["kll", "tdigest"])
+def test_empty_rank_sketch_answers_nan(spark, kind):
+    """A group whose values are all NaN keeps an n = 0 sketch; its
+    quantiles are NaN (null once in Spark, as with_quantiles answers an
+    empty DDSketch) and the query does not fail."""
+    agg, decode = {
+        "kll": (sk.kll_agg, KLLSketch.from_bytes),
+        "tdigest": (sk.tdigest_agg, TDigest.from_bytes),
+    }[kind]
+    nan = float("nan")
+    df = spark.createDataFrame([("a", 1.0), ("a", 2.0), ("b", nan), ("b", nan)], "g string, v double")
+    rows = {r["g"]: r for r in sk.with_sketch_quantiles(agg(df, "v", ["g"]), decode, [0.5, 0.9]).collect()}
+    assert 1.0 <= rows["a"]["p50"] <= rows["a"]["p90"] <= 2.0
+    assert all(x is None or np.isnan(x) for x in (rows["b"]["p50"], rows["b"]["p90"]))
+
+
 def test_two_phase_high_cardinality_bounded_memory(spark, monkeypatch):
     """10^5 distinct group keys: every HLL blob equals the core sketch of
-    its group's single item.  The KLL build, with its flush bound cut to 50
-    groups and 97-row Arrow batches, emits several partials per group per
-    task, and the streaming merge folds them back into each group's exact
-    values."""
+    its group's single item.  The KLL build keeps nothing across Arrow
+    batches: with 97-row batches it emits one partial per group of each
+    batch, and the streaming merge folds them back into each group's exact
+    values, sorted.  The t-digest build, with its flush bound cut to 50
+    groups, emits more partials, and they merge back to 10 values a group."""
     n_groups = 100_000
     df = (
         spark.range(n_groups)
@@ -176,27 +231,42 @@ def test_two_phase_high_cardinality_bounded_memory(spark, monkeypatch):
         F.pmod("id", F.lit(2000)).cast("string").alias("g"), F.col("id").cast("double").alias("v")
     ).repartition(3)
 
-    def partial_rows() -> int:
+    def batch_groups(batches):
+        for pdf in batches:
+            yield pd.DataFrame({"rows": [len(pdf)], "groups": [pdf["g"].nunique()]})
+
+    def tdigest_partials() -> int:
         with monkeypatch.context() as m:
             m.setattr(sk, "two_phase_merge", lambda partials, *a, **kw: partials)
-            return sk.kll_agg(vals, "v", ["g"], k=200).count()
+            return sk.tdigest_agg(vals, "v", ["g"]).count()
 
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "97")
     try:
-        unflushed = partial_rows()
-        monkeypatch.setattr(sk, "_FLUSH_GROUPS", 50)
-        assert partial_rows() > unflushed
+        with monkeypatch.context() as m:
+            m.setattr(sk, "two_phase_merge", lambda partials, *a, **kw: partials)
+            partials = sk.kll_agg(vals, "v", ["g"], k=200).toPandas()
+        batches = vals.mapInPandas(batch_groups, "rows long, groups long").toPandas()
         merged = sk.kll_agg(vals, "v", ["g"], k=200).collect()
+        # t-digest keeps one object per group and task up to _FLUSH_GROUPS
+        unflushed = tdigest_partials()
+        monkeypatch.setattr(sk, "_FLUSH_GROUPS", 50)
+        assert tdigest_partials() > unflushed
+        digests = sk.tdigest_agg(vals, "v", ["g"]).collect()
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    assert len(digests) == 2000
+    assert all(TDigest.from_bytes(bytes(r["sketch"])).n == 10 for r in digests)
+    assert batches["rows"].max() == 97
+    assert len(partials) == batches["groups"].sum() > 2000
+    sizes = [KLLSketch.from_bytes(bytes(b)).n for b in partials["sketch"]]
+    assert sum(sizes) == 20_000 and max(sizes) <= 97
     assert len(merged) == 2000
     for r in merged:
         s = KLLSketch.from_bytes(bytes(r["sketch"]))
-        g = int(r["g"])
         # 10 values per group never compact at k=200: level 0 holds them all
-        assert s.n == 10
-        assert np.array_equal(np.sort(s.levels[0]), np.arange(g, 20_000, 2000, dtype=float))
+        assert s.n == 10 and len(s.levels) == 1
+        assert np.array_equal(s.levels[0], np.arange(int(r["g"]), 20_000, 2000, dtype=float))
 
 
 def test_null_group_key_merges_to_one_row(spark):
