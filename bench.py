@@ -240,24 +240,13 @@ def main() -> None:
     )
     turns_per_sec = SYNTH_TURNS / dt
 
-    # the same build through the UDAF (sketch-value) path, two-phase
-    stage(
-        "synth_ddsketch_udaf",
-        2,
-        lambda: dd.with_quantiles(
-            dd.ddsketch_agg(src, "v", ["role"], cfg, strategy="combine"),
-            (0.5, 0.95, 0.99),
-        ),
-    )
-
-    # UDAF blobs via the relational-bins build (strategy='bins': Arrow ships
-    # groups x buckets rows, not raw rows)
+    # the same quantiles through the UDAF (sketch-value) build: Arrow ships
+    # groups x buckets bin rows, not raw rows
     stage(
         "synth_ddsketch_udaf_bins",
         2,
         lambda: dd.with_quantiles(
-            dd.ddsketch_agg(src, "v", ["role"], cfg, strategy="bins"),
-            (0.5, 0.95, 0.99),
+            dd.ddsketch_agg(src, "v", ["role"], cfg), (0.5, 0.95, 0.99)
         ),
     )
 
@@ -295,17 +284,9 @@ def main() -> None:
     )
 
     # ---- skewed-key stage: one hot group holding ~87% of rows --------------
-    # The north rule names skew handling; this measures the three topologies
-    # on an adversarially skewed key.  Finding (BASELINE.md skew run): the
-    # map-side-combined 'combine' strategy is skew-IMMUNE by construction
-    # (the hot key fans out over per-partition partials) and wins outright;
-    # row salting (plans/twophase.salted_rows_ddsketch_agg) restores task
-    # balance for the repartition strategy with bit-identical results
-    # (pytest-asserted), but on THIS host the repartition path is
-    # shuffle/Arrow-transfer-bound, not build-bound, so balance does not
-    # translate into wall time — all three numbers are reported.
-    from sketches_go_spark.plans.twophase import salted_rows_ddsketch_agg
-
+    # The blob build is skew-immune by construction: a hot key fans out over
+    # its buckets in the map-side-combined bins aggregation before any
+    # group reaches one task.
     skew_src = synth.select(
         F.when(F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(8)) < 7, F.lit("g-hot"))
         .otherwise(
@@ -317,21 +298,7 @@ def main() -> None:
         .alias("g"),
         F.length("text").cast("double").alias("v"),
     )
-    stage(
-        "synth_skew_repartition_unsalted",
-        2,
-        lambda: dd.ddsketch_agg(skew_src, "v", ["g"], cfg, strategy="repartition"),
-    )
-    stage(
-        "synth_skew_repartition_salted",
-        2,
-        lambda: salted_rows_ddsketch_agg(skew_src, "v", ["g"], cfg, num_salts=32),
-    )
-    stage(
-        "synth_skew_combine",
-        2,
-        lambda: dd.ddsketch_agg(skew_src, "v", ["g"], cfg, strategy="combine"),
-    )
+    stage("synth_skew", 2, lambda: dd.ddsketch_agg(skew_src, "v", ["g"], cfg))
 
     # ---- training-data pipeline operators (separate section: keeps the
     # headline `value` comparable to prior rounds) --------------------------

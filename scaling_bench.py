@@ -122,28 +122,17 @@ def job():
             t.select("role", measure.alias("v")), "v", ["role"], cfg)
         return out.agg(F.sum("qrank")).collect()
     src = t.select("role", "tool", measure.alias("v"))
-    if job_kind == "udaf":
-        # CPU-bound per byte: Arrow transfer + vectorized numpy partial build
-        # + encode + streaming merge (the python-path operator profile)
-        return dd.with_quantiles(
-            dd.ddsketch_agg(src, "v", ["role", "tool"], cfg, strategy="combine"),
-            (0.5, 0.95, 0.99),
-        ).count()
     if job_kind == "udaf_bins":
-        # the boundary mitigation: blobs assembled FROM the relational bins
-        # relation (raw rows never cross the Arrow boundary)
+        # the blob build: blobs assembled FROM the relational bins relation
+        # (raw rows never cross the Arrow boundary)
         return dd.with_quantiles(
-            dd.ddsketch_agg(src, "v", ["role", "tool"], cfg, strategy="bins"),
+            dd.ddsketch_agg(src, "v", ["role", "tool"], cfg),
             (0.5, 0.95, 0.99),
         ).count()
-    if job_kind in ("skew_unsalted", "skew_salted", "skew_combine"):
-        # one hot key owning ~87.5%% of rows among 20 groups: the repartition
-        # build strategy puts the whole hot key in ONE task; row-level
-        # salting splits it across 32 tasks with identical output; the
-        # map-side-combined 'combine' strategy never concentrates the key at
-        # all (few-fat-groups regime — salting every group of a
-        # high-cardinality key would explode partial counts instead)
-        from sketches_go_spark.plans.twophase import salted_rows_ddsketch_agg
+    if job_kind == "skew":
+        # one hot key owning ~87.5% of rows among 20 groups: the bins
+        # aggregation fans the hot key out over its buckets map-side, so no
+        # task ever holds its raw rows
         skew_src = t.select(
             F.when(F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(8)) < 7,
                    F.lit("g-hot"))
@@ -152,14 +141,7 @@ def job():
             .alias("g"),
             measure.alias("v"),
         )
-        if job_kind == "skew_salted":
-            return salted_rows_ddsketch_agg(skew_src, "v", ["g"], cfg,
-                                            num_salts=32).count()
-        if job_kind == "skew_combine":
-            return dd.ddsketch_agg(skew_src, "v", ["g"], cfg,
-                                   strategy="combine").count()
-        return dd.ddsketch_agg(skew_src, "v", ["g"], cfg,
-                               strategy="repartition").count()
+        return dd.ddsketch_agg(skew_src, "v", ["g"], cfg).count()
     if job_kind == "temporal":
         # the workload's dominant raw-row shuffle shape: one window exchange
         # on the conversation key (10M groups x 10 rows), then per-session
@@ -306,15 +288,13 @@ def main() -> None:
     ap.add_argument("--high", type=int, default=nproc)
     ap.add_argument("--reps", type=int, default=5)
     ap.add_argument("--job",
-                    choices=["relational", "udaf", "udaf_bins", "skew",
+                    choices=["relational", "udaf_bins", "skew",
                              "temporal", "components", "minhash", "assemble",
                              "qrank"],
                     default="relational",
                     help="relational: parquet-scan-bound (bandwidth-limited on "
-                         "ONE box); udaf: CPU-bound python path (isolates core "
-                         "scaling from the shared memory bus); skew: salted vs "
-                         "unsalted repartition build under a 50%%-hot key at "
-                         "--high cores (not a two-level scaling run); "
+                         "ONE box); udaf_bins: the blob build + quantile UDF; "
+                         "skew: the blob build under a ~87.5%%-hot key; "
                          "temporal: sessionize end-to-end (the window-exchange "
                          "shape, 10M conversation keys)")
     ap.add_argument("--no-stamp", action="store_true",
@@ -335,53 +315,6 @@ def main() -> None:
         cache = materialize_docs(args.turns)
     else:
         cache = materialize(args.turns)
-    if args.job == "skew":
-        unsalted = measure(args.high, cache, args.turns, args.reps, "skew_unsalted")
-        salted = measure(args.high, cache, args.turns, args.reps, "skew_salted")
-        combine = measure(args.high, cache, args.turns, args.reps, "skew_combine")
-        result = {
-            "job": "skewed-key sketch build (hot key ~87.5% of rows): "
-                   "repartition unsalted vs row-salted (32 salts) vs "
-                   "map-side-combined",
-            "turns": args.turns,
-            "cores": args.high,
-            "repartition_unsalted": unsalted,
-            "repartition_salted": salted,
-            "combine": combine,
-            "combine_speedup_vs_unsalted": round(
-                unsalted["best_sec"] / combine["best_sec"], 3
-            ),
-            "salting_speedup_vs_unsalted": round(
-                unsalted["best_sec"] / salted["best_sec"], 3
-            ),
-        }
-        print(json.dumps(result))
-        if not args.no_stamp:
-            stamp = (
-                f"\n## Measured skew run (scaling_bench.py --job skew, "
-                f"{args.turns:,} synthetic turns, local[{args.high}])\n\n"
-                f"One group holds ~87.5% of all rows; identical sketch output "
-                f"across all three topologies (pytest "
-                f"test_row_salted_equals_unsalted + strategy parity tests).\n\n"
-                f"| topology | best sec (of {args.reps}) | turns/sec |\n|---|---|---|\n"
-                f"| repartition, unsalted (hot key -> 1 task) | {unsalted['best_sec']} | {unsalted['turns_per_sec']:,} |\n"
-                f"| repartition, row-salted x32 | {salted['best_sec']} | {salted['turns_per_sec']:,} |\n"
-                f"| combine (map-side partials, skew-immune) | {combine['best_sec']} | {combine['turns_per_sec']:,} |\n\n"
-                f"Map-side combine beats the skewed repartition build "
-                f"{unsalted['best_sec'] / combine['best_sec']:.2f}x — the "
-                f"engine's first-choice skew answer is the topology that never "
-                f"concentrates a key, not a salted repair of one that does.  "
-                f"Row salting restores task balance with bit-identical output "
-                f"(its purpose is the forced-repartition case), but on this "
-                f"host the repartition path is shuffle/Arrow-transfer-bound "
-                f"rather than build-bound (~24 of 32 cores busy even with the "
-                f"hot key on one task), so restored balance cannot shorten "
-                f"wall time here; on a multi-executor cluster the unsalted "
-                f"hot task is a straggler and salting's balance does pay.\n"
-            )
-            with open(os.path.join(REPO, "BASELINE.md"), "a") as f:
-                f.write(stamp)
-        return
     low = measure(args.low, cache, args.turns, args.reps, args.job,
                   probe_rounds=False)
     high = measure(args.high, cache, args.turns, args.reps, args.job)
@@ -406,6 +339,8 @@ def main() -> None:
             "+ loader features; conv_id shuffle + in-group array_sort + "
             "render, ~120 chars/turn synthesized from the key)"
         )
+    elif args.job == "skew":
+        job_label = "ddsketch blob build by a key whose hottest group holds ~87.5% of rows"
     elif args.job == "qrank":
         job_label = (
             "per-row quantile normalization (bins agg + broadcast CDF join "

@@ -17,13 +17,11 @@ payload after partial agg is at most ``groups x buckets`` rows regardless
 of input size.
 
 **UDAF path:** the sketch as a *value* — an encoded ``BinaryType`` blob.
-Three build strategies (see :func:`ddsketch_agg`): ``bins``, the default
-(relational bins + single-scan exact-stat partials; the blobs are a
-serialization of that tiny bins relation, assembled a batch of whole
-groups at a time), ``combine`` (vectorized ``mapInPandas`` partial per input
-partition — map-side combine the Arrow way — then a shuffle of the tiny
-partials and a STREAMING sorted-run merge) and ``repartition`` (raw shuffle
-once, each group built in place, no merge).  Python never walks bins or
+One build (:func:`ddsketch_agg`): the relational bins, extended with
+single-scan exact-stat partials, serialized a batch of whole groups at a
+time — the blob is a serialization of the bins relation, not a second
+implementation of the same math.  One merge (:func:`ddsketch_merge`) for
+rollups, stored partials and checkpoint resume.  Python never walks bins or
 rows one by one: blobs are written, read and queried a whole Arrow batch
 at a time (``core.encoding.encode_batch`` / ``decode_batch``,
 ``DDSketchBatch.quantiles``).  Needed for bounded-memory collapsing
@@ -42,7 +40,6 @@ dense_store.go:153-165; MergeWith ddsketch.go:302-310.
 
 from __future__ import annotations
 
-import math
 from typing import Iterable, Iterator, Sequence
 
 import numpy as np
@@ -93,8 +90,11 @@ def build_bins(
 
     NaN / out-of-range / NULL measures are dropped (sign IS NULL), mirroring
     the reference's per-value rejection as a filter; callers needing the
-    rejected count can diff ``F.count`` against the bin totals.
-    One wide shuffle, map-side combined by Catalyst's partial hash agg.
+    rejected count can diff ``F.count`` against the bin totals.  A bins
+    relation has no row for a group with no bins: a group whose every value
+    is rejected is absent here (``ddsketch_agg`` keeps it as an empty
+    sketch).  One wide shuffle, map-side combined by Catalyst's partial
+    hash agg.
     """
     config = config or DDSketchConfig()
     value = F.col(value_col) if isinstance(value_col, str) else value_col
@@ -390,14 +390,19 @@ def _sketches_from_bins(frame: pd.DataFrame, kcols: Sequence[str], config: DDSke
     """One blob per key run of an extended bins frame sorted by (keys,
     sign, bucket) with columns count, vw (sum of v*w), mn and mx: the
     bins become a DDSketchBatch (sign-0 rows its zero counts), collapse
-    and encoding run once for the whole frame."""
+    and encoding run once for the whole frame.  A null-sign row holds a
+    group's rejected values: it keeps the group and adds nothing to it."""
     starts = _run_starts(frame, kcols)
     n_groups = starts.size
     group = np.repeat(np.arange(n_groups), np.diff(np.append(starts, len(frame))))
-    sign = frame["sign"].to_numpy(dtype=np.int8)
-    count = frame["count"].to_numpy(dtype=np.float64)
-    zero = sign == 0
-    bins = ~zero
+    kept = frame["sign"].notna().to_numpy()
+    sign = frame["sign"].to_numpy(dtype=np.int8, na_value=0)
+    count, vw, mn, mx = (frame[c].to_numpy(dtype=np.float64) for c in ("count", "vw", "mn", "mx"))
+    if not kept.all():
+        count, vw = np.where(kept, count, 0.0), np.where(kept, vw, 0.0)
+        mn, mx = np.where(kept, mn, np.inf), np.where(kept, mx, -np.inf)
+    zero = kept & (sign == 0)
+    bins = kept & (sign != 0)
     batch = DDSketchBatch(
         offsets=_offsets(group[bins], n_groups),
         sign=sign[bins],
@@ -405,141 +410,13 @@ def _sketches_from_bins(frame: pd.DataFrame, kcols: Sequence[str], config: DDSke
         count=count[bins],
         zero_count=np.bincount(group[zero], weights=count[zero], minlength=n_groups),
         exact_count=np.bincount(group, weights=count, minlength=n_groups),
-        exact_sum=np.bincount(group, weights=frame["vw"].to_numpy(dtype=np.float64), minlength=n_groups),
-        exact_min=np.minimum.reduceat(frame["mn"].to_numpy(dtype=np.float64), starts),
-        exact_max=np.maximum.reduceat(frame["mx"].to_numpy(dtype=np.float64), starts),
+        exact_sum=np.bincount(group, weights=vw, minlength=n_groups),
+        exact_min=np.minimum.reduceat(mn, starts),
+        exact_max=np.maximum.reduceat(mx, starts),
         mappings=[config.mapping()],
         mapping_id=np.zeros(n_groups, dtype=np.int64),
     )
     return _sketch_rows(frame, starts, kcols, *encode_batch(batch.collapsed(config)))
-
-
-# Buffered bin rows at which a partial build emits its blobs (an upper
-# bound on the groups held).
-_FLUSH_BIN_ROWS = 200_000
-
-
-def ddsketch_partial(
-    df: DataFrame,
-    value_col: str,
-    keys: Sequence[str],
-    config: DDSketchConfig | None = None,
-    weight_col: str | None = None,
-    metrics=None,
-) -> DataFrame:
-    """Phase 1: partial sketches per (group x input-partition), built
-    inside ``mapInPandas`` — the Arrow-side equivalent of map-side combine
-    (applyInPandas alone would ship every raw row of a group to one task).
-
-    Each Arrow batch reduces to an extended bins relation, (group, sign,
-    bucket) → count, sum of v*w, min v, max v, with one C-path pandas
-    groupby.  At ``_FLUSH_BIN_ROWS`` buffered bin rows the bins are
-    re-aggregated and emitted as blobs through the batch encoder, and the
-    merge stage folds a group's several partials.  Per-task memory is bounded whatever the key
-    cardinality.
-
-    Output: (keys..., sketch: binary).
-    """
-    return _pandas_build(
-        df, value_col, keys, config or DDSketchConfig(), weight_col, metrics, _FLUSH_BIN_ROWS
-    )
-
-
-def _pandas_build(
-    df: DataFrame,
-    value_col: str,
-    keys: Sequence[str],
-    config: DDSketchConfig,
-    weight_col: str | None,
-    metrics,
-    flush_rows: float,
-) -> DataFrame:
-    """The mapInPandas sketch build: blobs of the buffered extended bins,
-    emitted whenever ``flush_rows`` bin rows are buffered and at the end
-    of the partition."""
-    mapping = config.mapping()
-    key_fields = [df.schema[k] for k in keys]
-    out_schema = StructType(list(key_fields) + [StructField("sketch", BinaryType())])
-    cols = list(keys) + [value_col] + ([weight_col] if weight_col else [])
-    kcols = list(keys)
-    source = _with_null_flags(df.select(*cols), kcols)
-    gcols = _group_cols(source.columns, kcols)
-
-    def drain(parts: list[pd.DataFrame]) -> pd.DataFrame:
-        bins = (
-            pd.concat(parts, ignore_index=True)
-            .groupby([*gcols, "sign", "bucket"], sort=True, dropna=False)
-            .agg(count=("count", "sum"), vw=("vw", "sum"), mn=("mn", "min"), mx=("mx", "max"))
-            .reset_index()
-        )
-        return _sketches_from_bins(bins, kcols, config)
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts: list[pd.DataFrame] = []
-        buffered = 0
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            v = pdf[value_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            w = (
-                pdf[weight_col].to_numpy(dtype=np.float64, na_value=0.0)
-                if weight_col
-                else np.ones(v.size)
-            )
-            keep = ~(np.isnan(v) | (v > mapping.max_indexable) | (v < -mapping.max_indexable))
-            keep &= w > 0
-            if not keep.all():
-                v, w = v[keep], w[keep]
-                pdf = pdf.loc[keep]
-            if v.size == 0:
-                continue
-            pos = v > mapping.min_indexable
-            neg = v < -mapping.min_indexable
-            sign = np.where(pos, 1, np.where(neg, -1, 0)).astype(np.int8)
-            bucket = np.zeros(v.size, dtype=np.int64)
-            if pos.any():
-                bucket[pos] = mapping.index(v[pos])
-            if neg.any():
-                bucket[neg] = mapping.index(-v[neg])
-            # factorize string keys ONCE per batch and aggregate on the int
-            # codes — an all-integer groupby is ~30% cheaper than hashing
-            # python string objects per row (measured; the hot task of the
-            # skewed repartition build runs this loop over ~8.7M rows).
-            # Per-group accumulation order is unchanged (factorize preserves
-            # row order, groupby reduces in occurrence order either way), so
-            # the float sums are bit-identical to the direct-key groupby.
-            codes, uniqs = {}, {}
-            for k in gcols:
-                codes[k], uniqs[k] = pd.factorize(
-                    pdf[k].to_numpy(), use_na_sentinel=False
-                )
-            ccols = [f"_c_{k}" for k in gcols]
-            frame = pd.DataFrame({c: codes[k] for c, k in zip(ccols, gcols)})
-            frame["sign"] = sign
-            frame["bucket"] = bucket
-            frame["w"] = w
-            frame["vw"] = v * w
-            frame["v"] = v
-            part = (
-                frame.groupby([*ccols, "sign", "bucket"], sort=False, dropna=False)
-                .agg(count=("w", "sum"), vw=("vw", "sum"), mn=("v", "min"), mx=("v", "max"))
-                .reset_index()
-            )
-            for c, k in zip(ccols, gcols):
-                part[k] = uniqs[k].take(part[c].to_numpy())
-            parts.append(part[[*gcols, "sign", "bucket", "count", "vw", "mn", "mx"]])
-            buffered += len(part)
-            if buffered >= flush_rows:
-                yield drain(parts)
-                parts, buffered = [], 0
-        if parts:
-            yield drain(parts)
-
-    if metrics is not None:
-        from sketches_go_spark.plans.metrics import instrument_map_in_pandas
-
-        build = instrument_map_in_pandas(build, metrics)
-    return source.mapInPandas(build, schema=out_schema)
 
 
 def ddsketch_merge(
@@ -548,8 +425,9 @@ def ddsketch_merge(
     config: DDSketchConfig | None = None,
     metrics=None,
 ) -> DataFrame:
-    """Phase 2: shuffle the (tiny) partials by group key and merge
-    (MergeWith semantics, ddsketch.go:302-310).
+    """Merge blobs by group key (MergeWith semantics, ddsketch.go:302-310):
+    the one DDSketch merge, for rollups, stored partials and checkpoint
+    resume.
 
     Implemented as repartition-by-key + sortWithinPartitions + a streaming
     mapInPandas pass — NOT applyInPandas, whose per-group invocation costs
@@ -557,7 +435,10 @@ def ddsketch_merge(
     runs is decoded at once (``decode_batch``), merged run by run
     (``DDSketchBatch.merge_runs``: bins, counts and the Kahan sum exactly
     as ``DDSketch.merge`` in partial order; a collapsing config folds each
-    run's union once) and re-encoded at once."""
+    run's union once) and re-encoded at once.  Bins, counts, min and max do
+    not depend on the order the shuffle delivers a run's partials in, and
+    neither does the sum of integer-valued data; fractional weights or
+    values leave the Kahan ``exact_sum`` order-dependent in its last bits."""
     config = config or DDSketchConfig()
     key_fields = [partials.schema[k] for k in keys]
     out_schema = StructType(list(key_fields) + [StructField("sketch", BinaryType())])
@@ -583,79 +464,44 @@ def ddsketch_agg(
     keys: Sequence[str],
     config: DDSketchConfig | None = None,
     weight_col: str | None = None,
-    strategy: str = "bins",
     metrics=None,
 ) -> DataFrame:
-    """Sketch aggregation: (keys..., sketch: binary).
+    """Sketch aggregation: (keys..., sketch: binary), one row per group.
 
-    strategy='bins' (default): build the bins RELATIONALLY first (pure
-    Catalyst, whole-stage codegen, map-side combined — the fastest build
-    path), with the exact count/sum/min/max carried as three extra
-    bin-level aggregates in the SAME single scan, then assemble the blobs
-    from the tiny bins relation: key-run boundaries found with numpy, one
-    batch encode per Arrow batch, only the last unfinished group carried
-    across batches.  Arrow ships ``groups x buckets`` bin rows to Python
-    instead of every raw row.  On the benchmark's per_conv workload (~2k
-    groups of ~10 values, 4 cores) ``ddsketch_agg`` → ``with_quantiles``
-    takes ~44 % less CPU than with 'combine' as the default and the
-    per-sketch codec (README "UDAF blobs" has the A/B).
+    One Catalyst aggregation builds the bins relation EXTENDED with per-bin
+    exact-stat partials (sum of v*w, min v, max v) — whole-stage codegen,
+    map-side combined, one scan — and the blobs are assembled from that
+    tiny relation: repartitioned by the keys, sorted by (keys, sign,
+    bucket), key-run boundaries found with numpy, one batch encode per
+    frame of whole groups, only the last unfinished group carried across
+    Arrow batches.  Arrow ships ``groups x buckets`` bin rows to Python
+    instead of every raw row, so a task holds one Arrow batch plus one
+    group's bins, and a hot key reaches the assembler already combined
+    over its buckets.  Any partitioning of the input gives the same bins
+    (DDSketch is fully mergeable).
 
-    strategy='combine': two-phase partial-per-partition → shuffle tiny
-    encoded partials → merge.  The map-side combine shrinks the shuffle to
-    ~groups x partitions blobs when groups repeat within input partitions.
-
-    strategy='repartition': shuffle the raw (keys, value) rows once so each
-    group lands wholly in one partition, then build the final sketches
-    there in one pass — no merge stage, no decode.  A task holds its
-    partition's bins until the partition ends."""
+    Rejected values (NaN, NULL, out of range, or a weight that is NULL,
+    NaN or <= 0) aggregate into one null-sign row per group, which the
+    assembler leaves out of the bins and the exact stats: a group whose
+    every value is rejected keeps its row, an empty sketch, as ``groupBy``
+    keeps it."""
     config = config or DDSketchConfig()
-    if strategy == "repartition":
-        cols = [value_col] + ([weight_col] if weight_col else [])
-        shuffled = df.select(*keys, *cols).repartition(*keys)
-        # each group is whole in one task, so the build never flushes and
-        # needs no merge stage
-        return _pandas_build(shuffled, value_col, keys, config, weight_col, metrics, math.inf)
-    if strategy == "combine":
-        return ddsketch_merge(
-            ddsketch_partial(df, value_col, keys, config, weight_col, metrics),
-            keys,
-            config,
-            metrics,
-        )
-    if strategy != "bins":
-        raise ValueError(f"unknown strategy {strategy!r}")
-    return _ddsketch_agg_from_bins(df, value_col, keys, config, weight_col, metrics)
-
-
-def _ddsketch_agg_from_bins(
-    df: DataFrame,
-    value_col: str,
-    keys: Sequence[str],
-    config: DDSketchConfig,
-    weight_col: str | None = None,
-    metrics=None,
-) -> DataFrame:
-    """strategy='bins' build: one Catalyst aggregation produces the bins
-    relation EXTENDED with per-bin exact-stat partials (sum of v*w, min v,
-    max v), so the exact summary re-aggregates from bins without a second
-    scan of the raw data; the blobs are assembled from the sorted bins a
-    batch of whole groups at a time."""
-    mapping = config.mapping()
     value = F.col(value_col)
-    sign, bucket = sign_bucket(value, mapping)
-    weight = (
-        F.lit(1.0) if weight_col is None else F.col(weight_col).cast("double")
-    )
-    v = value.cast("double")
+    sign, bucket = sign_bucket(value, config.mapping())
+    weight = F.lit(1.0)
+    if weight_col is not None:
+        weight = F.col(weight_col).cast("double")
+        # Spark orders NaN above every double, so NaN > 0 holds
+        kept = (weight > 0) & ~F.isnan(weight)
+        sign, bucket = F.when(kept, sign), F.when(kept, bucket).otherwise(0)
     ext = (
         df.select(
             *keys,
             sign.alias("sign"),
             bucket.alias("bucket"),
             weight.alias("w"),
-            v.alias("v"),
+            value.cast("double").alias("v"),
         )
-        .where(F.col("sign").isNotNull() & (F.col("w") > 0))
         .groupBy(*keys, "sign", "bucket")
         .agg(
             F.sum("w").alias("count"),

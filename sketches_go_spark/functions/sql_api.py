@@ -11,8 +11,8 @@ These are Arrow grouped-aggregate pandas UDFs over the SAME core sketches
 library paths.  Trade-off, stated plainly: a grouped-agg UDF materializes
 each group's values into one Arrow batch — the ergonomic path, NOT the
 100-TB path.  At scale use the relational bins/registers relations or the
-two-phase ``ddsketch_agg`` (partial-sketch shuffle, bounded memory); this
-module exists for API completeness and interactive use.
+blob build ``ddsketch_agg`` (a shuffle of map-side-combined bins, bounded
+memory); this module exists for API completeness and interactive use.
 
 Registered names (prefix ``sgs_``):
   sgs_ddsketch_p50 / p95 / p99  (double column -> double)

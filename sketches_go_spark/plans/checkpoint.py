@@ -61,16 +61,12 @@ class CheckpointedSketchJob:
         n_slices: int = 16,
         config: DDSketchConfig | None = None,
         slices_per_batch: int = 4,
-        strategy: str = "bins",
     ):
         self.job_dir = job_dir
         self.keys = list(keys)
         self.n_slices = n_slices
         self.config = config or DDSketchConfig()
         self.slices_per_batch = slices_per_batch
-        # 'bins' builds each slice's sketches from the relational bins
-        # relation (fastest single-scan path); any ddsketch_agg strategy works
-        self.strategy = strategy
         os.makedirs(job_dir, exist_ok=True)
 
     @property
@@ -132,8 +128,7 @@ class CheckpointedSketchJob:
             chunk = missing[i : i + self.slices_per_batch]
             t0 = time.perf_counter()
             part = sliced.where(F.col("_slice").isin([int(s) for s in chunk]))
-            out = ddsketch_agg(part, value_col, [*self.keys, "_slice"],
-                               self.config, strategy=self.strategy)
+            out = ddsketch_agg(part, value_col, [*self.keys, "_slice"], self.config)
             # executor-side write; partitionBy splits the chunk per slice
             out.write.mode("overwrite").partitionBy("_slice").parquet(staging)
             wall = time.perf_counter() - t0

@@ -42,12 +42,10 @@ def _expected(rows):
 
 def _builds(df):
     kll = sk.kll_agg(df, "v", ["g"])
+    ddsketch = dd.ddsketch_agg(df, "v", ["g"])
     return {
-        "ddsketch_agg[bins]": (dd.ddsketch_agg(df, "v", ["g"]), "dd"),
-        "ddsketch_agg[combine]": (dd.ddsketch_agg(df, "v", ["g"], strategy="combine"), "dd"),
-        "ddsketch_agg[repartition]": (dd.ddsketch_agg(df, "v", ["g"], strategy="repartition"), "dd"),
-        "ddsketch_merge": (dd.ddsketch_merge(dd.ddsketch_partial(df, "v", ["g"]).union(
-            dd.ddsketch_partial(df, "v", ["g"])), ["g"]), "dd2"),
+        "ddsketch_agg": (ddsketch, "dd"),
+        "ddsketch_merge": (dd.ddsketch_merge(ddsketch.union(ddsketch), ["g"]), "dd2"),
         "hll_agg": (sk.hll_agg(df, "item", ["g"]), "hll"),
         "cms_agg": (sk.cms_agg(df, "item", ["g"]), "cms"),
         "bloom_agg": (sk.bloom_agg(df, "item", ["g"]), "bloom"),

@@ -1,5 +1,6 @@
-"""Salted topology equivalence, checkpoint/resume with injected failure,
-and Structured Streaming sketch aggregation (file source, availableNow)."""
+"""The blob build under key skew, checkpoint/resume with injected failure,
+per-task metrics, and Structured Streaming sketch aggregation (file source,
+availableNow)."""
 
 import os
 import time
@@ -13,10 +14,6 @@ from sketches_go_spark.core.ddsketch import DDSketch, DDSketchConfig
 from sketches_go_spark.core.encoding import decode_sketch
 from sketches_go_spark.functions import ddsketch_fns as dd
 from sketches_go_spark.plans.checkpoint import CheckpointedSketchJob
-from sketches_go_spark.plans.twophase import (
-    salted_ddsketch_agg,
-    salted_rows_ddsketch_agg,
-)
 from sketches_go_spark.streaming.stream_agg import (
     foreach_batch_quantiles,
     stateful_sketch_stream,
@@ -40,38 +37,40 @@ def skewed(spark):
     return spark.createDataFrame(pdf).repartition(16), pdf
 
 
-def test_salted_equals_unsalted(spark, skewed):
-    sdf, pdf = skewed
-    plain = dd.ddsketch_agg(sdf, "v", ["g"], CFG).collect()
-    salted = salted_ddsketch_agg(sdf, "v", ["g"], CFG, num_salts=8).collect()
-    plain_m = {r["g"]: decode_sketch(bytes(r["sketch"])) for r in plain}
-    salt_m = {r["g"]: decode_sketch(bytes(r["sketch"])) for r in salted}
-    assert plain_m.keys() == salt_m.keys()
-    for g in plain_m:
-        a, b = plain_m[g], salt_m[g]
-        assert np.array_equal(a.pos_idx, b.pos_idx)
-        assert np.allclose(a.pos_cnt, b.pos_cnt)
-        assert a.count == pytest.approx(b.count)
-        # and both match a local sketch of the same rows
-        core = DDSketch.from_values(pdf[pdf["g"] == g]["v"].to_numpy(), config=CFG)
+def _assert_core_sketches(rows, pdf):
+    """Each group's blob holds the core sketch of its rows: same bins,
+    counts, min and max, the exact sum within rel 1e-9."""
+    got = {r["g"]: decode_sketch(bytes(r["sketch"])) for r in rows}
+    assert got.keys() == set(pdf["g"])
+    for g, sub in pdf.groupby("g"):
+        a, core = got[g], DDSketch.from_values(sub["v"].to_numpy(), config=CFG)
         assert np.array_equal(a.pos_idx, core.pos_idx)
+        assert np.array_equal(a.pos_cnt, core.pos_cnt)
+        assert a.count == core.count and a.zero_count == core.zero_count
+        assert a.exact_min == core.exact_min and a.exact_max == core.exact_max
+        assert a.sum == pytest.approx(core.sum, rel=1e-9)
+
+
+def test_salted_equals_unsalted(spark, skewed):
+    """One hot key owning 80% of the rows, spread over 16 input
+    partitions: the blob build needs no salting, each group's blob is the
+    core sketch of its rows."""
+    sdf, pdf = skewed
+    _assert_core_sketches(dd.ddsketch_agg(sdf, "v", ["g"], CFG).collect(), pdf)
 
 
 def test_row_salted_equals_unsalted(spark, skewed):
-    """Row-level salting (the repartition-strategy skew fix) must produce
-    bin-for-bin identical sketches to the unsalted build."""
+    """The same 80%-hot frame with each key's rows whole in one input
+    partition (the hot key in one task) and 97-row Arrow batches: the
+    build still gives the core sketch of each group's rows."""
     sdf, pdf = skewed
-    plain = dd.ddsketch_agg(sdf, "v", ["g"], CFG, strategy="repartition").collect()
-    salted = salted_rows_ddsketch_agg(sdf, "v", ["g"], CFG, num_salts=8).collect()
-    plain_m = {r["g"]: decode_sketch(bytes(r["sketch"])) for r in plain}
-    salt_m = {r["g"]: decode_sketch(bytes(r["sketch"])) for r in salted}
-    assert plain_m.keys() == salt_m.keys()
-    for g in plain_m:
-        a, b = plain_m[g], salt_m[g]
-        assert np.array_equal(a.pos_idx, b.pos_idx)
-        assert np.allclose(a.pos_cnt, b.pos_cnt)
-        assert a.count == pytest.approx(b.count)
-        assert a.exact_min == b.exact_min and a.exact_max == b.exact_max
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "97")
+    try:
+        rows = dd.ddsketch_agg(sdf.repartition(4, "g"), "v", ["g"], CFG).collect()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    _assert_core_sketches(rows, pdf)
 
 
 def test_checkpoint_resume_after_failure(spark, skewed, tmp_path):
@@ -226,20 +225,30 @@ def test_stateful_sketch_stream(spark, stream_dir):
 
 
 def test_per_task_metrics(spark, skewed):
-    """North-rule per-task metrics: one record per task of the partial and
-    merge stages, with row counts and wall time."""
+    """North-rule per-task metrics: one record per task of the blob
+    assembler stage, whose rows in are exactly the extended bins rows."""
     from sketches_go_spark.plans.metrics import TaskMetricsCollector
 
     sdf, pdf = skewed
+    sc = spark.sparkContext
     mc = TaskMetricsCollector(spark, name="test-job")
-    dd.ddsketch_agg(sdf, "v", ["g"], CFG, strategy="combine", metrics=mc).count()
-    recs = mc.records()
-    assert len(recs) >= 2  # at least partial tasks + merge tasks
+    group = "per-task-metrics"
+    sc.setJobGroup(group, "blob build with per-task metrics")
+    try:
+        dd.ddsketch_agg(sdf, "v", ["g"], CFG, metrics=mc).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     frame = mc.to_frame()
-    assert frame["rows_in"].sum() >= len(pdf)  # partials saw every row
+    assert frame["stage_id"].nunique() == 1
+    tracker = sc.statusTracker()
+    stages = {s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds}
+    assert frame["stage_id"].iloc[0] in stages
+    assert len(frame) == tracker.getStageInfo(int(frame["stage_id"].iloc[0])).numTasks
+    assert frame["partition_id"].is_unique
+    # no value of the fixture is rejected: the extended bins are the bins
+    assert frame["rows_in"].sum() == dd.build_bins(sdf, "v", ["g"], CFG).count()
+    assert frame["rows_out"].sum() == pdf["g"].nunique()
     assert (frame["wall_sec"] >= 0).all()
-    assert (frame["partition_id"] >= 0).all()
-    assert frame["stage_id"].nunique() >= 2  # two distinct stages reported
 
 
 def test_streaming_windowed_watermark(spark, stream_dir):

@@ -47,7 +47,7 @@ def test_transcripts_roundtrip_all_formats(spark, tmp_path, fmt):
 def test_sketch_sink_roundtrip(spark, tmp_path):
     t = transcripts_from_events(spark, SF_SMOKE)
     src = t.select("role", F.length("text").cast("double").alias("v"))
-    sketches = dd.ddsketch_agg(src, "v", ["role"], CFG, strategy="bins")
+    sketches = dd.ddsketch_agg(src, "v", ["role"], CFG)
     want = {r["role"]: bytes(r["sketch"]) for r in sketches.collect()}
     path = str(tmp_path / "sketch_warehouse")
     sio.write_sketches(sketches, path, partition_by=["role"])

@@ -236,19 +236,25 @@ def test_companion_udaf_plans_have_no_per_group_python(spark, sdf):
     from sketches_go_spark.functions import sketch_fns as skf
 
     items = sdf.withColumn("item", F.col("v").cast("string"))
-    # HLL / CMS / Bloom: one assembler over the Catalyst relation;
-    # KLL / t-digest: partial build + streaming merge
+    # DDSketch / HLL / CMS / Bloom: one assembler over the Catalyst
+    # relation; KLL / t-digest: partial build + streaming merge; the
+    # DDSketch merge: one streaming pass over the shuffled blobs.
+    # (python stages, hash exchanges) per plan
+    stored = spark.createDataFrame(dd.ddsketch_agg(sdf, "v", ["g"], CFG).toPandas())
     plans = {
-        "hll": (skf.hll_agg(items, "item", ["g"], p=6), 1),
-        "cms": (skf.cms_agg(items, "item", ["g"]), 1),
-        "bloom": (skf.bloom_agg(items, "item", ["g"]), 1),
-        "kll": (skf.kll_agg(sdf, "v", ["g"], k=50), 2),
-        "tdigest": (skf.tdigest_agg(sdf, "v", ["g"], delta=50.0), 2),
+        "ddsketch": (dd.ddsketch_agg(sdf, "v", ["g"], CFG), 1, 2),
+        "ddsketch_merge": (dd.ddsketch_merge(stored, ["g"], CFG), 1, 1),
+        "hll": (skf.hll_agg(items, "item", ["g"], p=6), 1, 2),
+        "cms": (skf.cms_agg(items, "item", ["g"]), 1, 2),
+        "bloom": (skf.bloom_agg(items, "item", ["g"]), 1, 2),
+        "kll": (skf.kll_agg(sdf, "v", ["g"], k=50), 2, 1),
+        "tdigest": (skf.tdigest_agg(sdf, "v", ["g"], delta=50.0), 2, 1),
     }
-    for name, (df, stages) in plans.items():
+    for name, (df, stages, exchanges) in plans.items():
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "FlatMapGroupsInPandas" not in plan, name
         assert plan.count("MapInPandas") == stages, name
+        assert _shape(df)["hash_exchanges"] == exchanges, name
 
 
 def test_pair_operators_use_equality_joins(spark):
@@ -276,85 +282,21 @@ def test_pair_operators_use_equality_joins(spark):
         assert "BroadcastNestedLoopJoin" not in plan, name
 
 
-def test_ddsketch_agg_bins_strategy_parity(spark):
-    """strategy='bins' (the default: relational bins + blob assembly, single
-    scan with bin-level exact-stat partials) must agree with
-    strategy='combine' on every bin, the zero count, and the exact summary."""
-    import pandas as pd
-
-    from sketches_go_spark.core.encoding import decode_sketch
-
-    rng = np.random.default_rng(41)
-    n = 40000
-    pdf = pd.DataFrame(
-        {
-            "g": rng.choice(["a", "b", "c", None], n).astype(object),
-            "v": np.concatenate(
-                [rng.lognormal(1, 2, n // 2), -rng.exponential(3, n // 2)]
-            ),
-            "w": rng.integers(1, 4, n).astype(float),
-        }
-    )
-    pdf.loc[rng.choice(n, 50, replace=False), "v"] = 0.0
-    sdf = spark.createDataFrame(pdf).repartition(8)
-    combine = {
-        tuple(r[:1]): decode_sketch(bytes(r["sketch"]))
-        for r in dd.ddsketch_agg(
-            sdf, "v", ["g"], CFG, weight_col="w", strategy="combine"
-        ).collect()
-    }
-    bins = {
-        tuple(r[:1]): decode_sketch(bytes(r["sketch"]))
-        for r in dd.ddsketch_agg(sdf, "v", ["g"], CFG, weight_col="w").collect()
-    }
-    assert combine.keys() == bins.keys() and len(bins) == 4
-    for k in combine:
-        a, b = combine[k], bins[k]
-        assert np.array_equal(a.pos_idx, b.pos_idx)
-        assert np.allclose(a.pos_cnt, b.pos_cnt)
-        assert np.array_equal(a.neg_idx, b.neg_idx)
-        assert np.allclose(a.neg_cnt, b.neg_cnt)
-        assert a.zero_count == pytest.approx(b.zero_count)
-        assert a.exact_count == pytest.approx(b.exact_count)
-        assert a.exact_sum == pytest.approx(b.exact_sum, rel=1e-9)
-        assert a.exact_min == b.exact_min and a.exact_max == b.exact_max
-        for q in (0.01, 0.5, 0.99):
-            assert a.quantile(q) == b.quantile(q)
-
-
-def test_bins_strategy_group_spans_arrow_batches(spark):
-    """A group whose bins relation spans several Arrow batches must still
-    assemble into ONE sketch (the run buffers persist across batches)."""
-    from sketches_go_spark.core.encoding import decode_sketch
-
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "97")
-    try:
-        # ~1400 distinct buckets per group >> 97 rows per Arrow batch
-        sdf = spark.range(4000).select(
-            F.pmod("id", F.lit(2)).cast("string").alias("g"),
-            F.pow(F.lit(1.02), F.pmod("id", F.lit(1400))).alias("v"),
-        )
-        rows = dd.ddsketch_agg(sdf, "v", ["g"], CFG, strategy="bins").collect()
-        assert len(rows) == 2
-        ref = {
-            r["g"]: decode_sketch(bytes(r["sketch"]))
-            for r in dd.ddsketch_agg(sdf, "v", ["g"], CFG, strategy="combine").collect()
-        }
-        for r in rows:
-            got = decode_sketch(bytes(r["sketch"]))
-            want = ref[r["g"]]
-            assert np.array_equal(got.pos_idx, want.pos_idx)
-            assert np.allclose(got.pos_cnt, want.pos_cnt)
-            assert got.exact_count == pytest.approx(want.exact_count)
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-
-
 def _decoded(df, key):
     from sketches_go_spark.core.encoding import decode_sketch
 
     return {r[key]: decode_sketch(bytes(r["sketch"])) for r in df.collect()}
+
+
+def _core_sketches(pdf, config=CFG, weight=None):
+    """The core sketch of each group's rows of ``pdf`` (columns g, v and
+    the optional weight), a null key included."""
+    return {
+        None if pd.isna(g) else g: DDSketch.from_values(
+            sub["v"].to_numpy(), None if weight is None else sub[weight].to_numpy(), config=config
+        )
+        for g, sub in pdf.groupby("g", dropna=False)
+    }
 
 
 def _assert_same_build(got, want):
@@ -370,10 +312,55 @@ def _assert_same_build(got, want):
         assert g.sum == pytest.approx(w.sum, rel=1e-9, abs=1e-12)
 
 
+def test_ddsketch_agg_bins_strategy_parity(spark):
+    """The blob build, weighted, over values of all three signs and a null
+    key, equals the core sketch of each group's rows on every bin, the
+    zero count and the exact summary, and answers the same quantiles."""
+    rng = np.random.default_rng(41)
+    n = 40000
+    pdf = pd.DataFrame(
+        {
+            "g": rng.choice(["a", "b", "c", None], n).astype(object),
+            "v": np.concatenate(
+                [rng.lognormal(1, 2, n // 2), -rng.exponential(3, n // 2)]
+            ),
+            "w": rng.integers(1, 4, n).astype(float),
+        }
+    )
+    pdf.loc[rng.choice(n, 50, replace=False), "v"] = 0.0
+    sdf = spark.createDataFrame(pdf).repartition(8)
+    got = _decoded(dd.ddsketch_agg(sdf, "v", ["g"], CFG, weight_col="w"), "g")
+    want = _core_sketches(pdf, weight="w")
+    assert len(want) == 4
+    _assert_same_build(got, want)
+    for k in want:
+        assert np.array_equal(got[k].quantiles([0.01, 0.5, 0.99]), want[k].quantiles([0.01, 0.5, 0.99]))
+
+
+def test_bins_strategy_group_spans_arrow_batches(spark):
+    """A group whose bins relation spans several Arrow batches must still
+    assemble into ONE sketch, the core sketch of its rows (the run buffers
+    persist across batches)."""
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "97")
+    try:
+        # ~700 distinct buckets per group >> 97 rows per Arrow batch
+        sdf = spark.range(4000).select(
+            F.pmod("id", F.lit(2)).cast("string").alias("g"),
+            F.pow(F.lit(1.02), F.pmod("id", F.lit(1400))).alias("v"),
+        )
+        got = _decoded(dd.ddsketch_agg(sdf, "v", ["g"], CFG), "g")
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    want = _core_sketches(sdf.toPandas())
+    assert len(got) == 2 and all(s.pos_idx.size > 600 for s in got.values())
+    _assert_same_build(got, want)
+
+
 @pytest.fixture(scope="module")
-def many_groups(spark):
+def many_groups_pdf():
     """3000 groups of ~13 values, a null-key group and one ~1400-bucket
-    group, split over 8 partitions."""
+    group."""
     rng = np.random.default_rng(43)
     n = 40000
     g = rng.integers(0, 3000, n).astype(str).astype(object)
@@ -382,48 +369,121 @@ def many_groups(spark):
     v[rng.choice(n, 300, replace=False)] = 0.0
     g[:4000] = "wide"
     v[:4000] = 1.02 ** (np.arange(4000) % 1400)
-    pdf = pd.DataFrame({"g": g, "v": v, "w": rng.integers(1, 4, n).astype(float)})
-    return spark.createDataFrame(pdf).repartition(8)
+    return pd.DataFrame({"g": g, "v": v, "w": rng.integers(1, 4, n).astype(float)})
 
 
-@pytest.mark.parametrize("strategy", ["bins", "repartition"])
-def test_build_high_cardinality_matches_combine(spark, many_groups, strategy):
-    """The default build and the repartition build at thousands of
-    groups, with Arrow batches of 97 rows so groups (the null-key one and
-    a 1400-bucket one among them) span batches, decode to the same
-    sketches as strategy='combine'."""
+@pytest.fixture(scope="module")
+def many_groups(spark, many_groups_pdf):
+    """``many_groups_pdf`` split over 8 partitions."""
+    return spark.createDataFrame(many_groups_pdf).repartition(8)
+
+
+def test_build_high_cardinality_matches_core(spark, many_groups, many_groups_pdf):
+    """The blob build at thousands of groups, with Arrow batches of 97
+    rows so groups (the null-key one and a 1400-bucket one among them)
+    span batches, equals the core sketch of each group's rows."""
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "97")
     try:
-        got = _decoded(
-            dd.ddsketch_agg(many_groups, "v", ["g"], CFG, weight_col="w", strategy=strategy), "g"
-        )
-        want = _decoded(
-            dd.ddsketch_agg(many_groups, "v", ["g"], CFG, weight_col="w", strategy="combine"), "g"
-        )
+        got = _decoded(dd.ddsketch_agg(many_groups, "v", ["g"], CFG, weight_col="w"), "g")
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    want = _core_sketches(many_groups_pdf, weight="w")
     assert len(want) == 3002 and None in want and want["wide"].pos_idx.size > 1000
     _assert_same_build(got, want)
 
 
-def test_partial_flush_bounds_groups_and_merge_restores(spark, many_groups, monkeypatch):
-    """A tiny flush bound (200 buffered bin rows, two 97-row Arrow
-    batches) makes each task emit several partials per group; the merge
-    folds them back into the unflushed result."""
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "97")
-    try:
-        monkeypatch.setattr(dd, "_FLUSH_BIN_ROWS", 200)
-        parts = dd.ddsketch_partial(many_groups, "v", ["g"], CFG, "w")
-        monkeypatch.setattr(dd, "_FLUSH_BIN_ROWS", 10**9)
-        plain = dd.ddsketch_partial(many_groups, "v", ["g"], CFG, "w")
-        assert parts.count() > plain.count()
-        got = _decoded(dd.ddsketch_merge(parts, ["g"], CFG), "g")
-        want = _decoded(dd.ddsketch_merge(plain, ["g"], CFG), "g")
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    _assert_same_build(got, want)
+@pytest.mark.parametrize(
+    "cfg",
+    [CFG, DDSketchConfig(alpha=0.01, max_bins=64, collapse="lowest")],
+    ids=["plain", "collapsing"],
+)
+def test_merge_order_does_not_change_blobs(spark, cfg):
+    """The same partials, one ``ddsketch_agg`` per input slice of 8 (so a
+    group, the null-key one among them, has up to 8), fed to
+    ``ddsketch_merge`` in 4 random row orders give byte-identical blobs for
+    integer-valued data, and those blobs hold each group's core sketch."""
+    from functools import reduce
+
+    rng = np.random.default_rng(47)
+    n = 20000
+    g = rng.integers(0, 200, n).astype(str).astype(object)
+    g[rng.choice(n, 200, replace=False)] = None
+    pdf = pd.DataFrame(
+        {"g": g, "v": rng.integers(-5000, 100000, n).astype(float), "s": rng.integers(0, 8, n)}
+    )
+    sdf = spark.createDataFrame(pdf)
+    partials = reduce(
+        lambda a, b: a.union(b),
+        [dd.ddsketch_agg(sdf.where(F.col("s") == i), "v", ["g"], cfg) for i in range(8)],
+    )
+    parts = partials.toPandas()
+    assert parts.groupby("g", dropna=False).size().min() == 8
+    runs = []
+    for seed in range(4):
+        shuffled = spark.createDataFrame(parts.sample(frac=1.0, random_state=seed), partials.schema)
+        merged = dd.ddsketch_merge(shuffled, ["g"], cfg).collect()
+        runs.append(sorted((r["g"] is None, r["g"] or "", bytes(r["sketch"])) for r in merged))
+    assert all(run == runs[0] for run in runs[1:])
+    from sketches_go_spark.core.encoding import decode_sketch
+
+    got = {None if isnull else g: decode_sketch(blob) for isnull, g, blob in runs[0]}
+    _assert_same_build(got, _core_sketches(pdf, cfg))
+
+
+def test_all_rejected_group_is_an_empty_sketch(spark):
+    """A group whose every value is rejected (NaN, or a NULL, NaN or
+    non-positive weight) keeps its row in every blob build, as ``groupBy`` keeps it: the
+    DDSketch blob is an empty sketch's, which answers NaN, and a rejected
+    row leaves its group's blob as the core sketch of the other rows."""
+    from sketches_go_spark.core.encoding import encode_sketch
+    from sketches_go_spark.functions import sketch_fns as skf
+
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [("a", 1.0), ("a", 2.0), ("a", nan), ("b", nan), ("b", nan)], "g string, v double"
+    )
+    builds = {
+        "ddsketch_agg": dd.ddsketch_agg(df, "v", ["g"], CFG),
+        "kll_agg": skf.kll_agg(df, "v", ["g"]),
+        "tdigest_agg": skf.tdigest_agg(df, "v", ["g"]),
+    }
+    for name, out in builds.items():
+        assert sorted(r["g"] for r in out.collect()) == ["a", "b"], name
+    empty = encode_sketch(DDSketch(config=CFG))
+    blobs = {r["g"]: bytes(r["sketch"]) for r in builds["ddsketch_agg"].collect()}
+    assert blobs["b"] == empty
+    assert blobs["a"] == encode_sketch(DDSketch.from_values([1.0, 2.0], config=CFG))
+    p50 = dd.with_quantiles(builds["ddsketch_agg"], [0.5]).toPandas().set_index("g")["p50"]
+    assert np.isnan(p50["b"]) and p50["a"] == pytest.approx(1.0, rel=0.02)
+    weighted = spark.createDataFrame(
+        [("a", 1.0, 1.0), ("a", 5.0, 0.0), ("a", 6.0, nan),
+         ("c", 1.0, 0.0), ("c", 2.0, -1.0), ("c", 3.0, None), ("c", 4.0, nan)],
+        "g string, v double, w double",
+    )
+    blobs = {r["g"]: bytes(r["sketch"]) for r in dd.ddsketch_agg(weighted, "v", ["g"], CFG, "w").collect()}
+    assert blobs == {"a": encode_sketch(DDSketch.from_values([1.0], config=CFG)), "c": empty}
+
+
+def test_whole_runs_bounded_at_a_million_groups():
+    """The assembler's regrouping of key-sorted Arrow batches, without
+    Spark: 10^6 groups in 65,536-row batches, one group spanning several
+    batches.  Every group comes out whole, in exactly one frame, and no
+    frame is larger than one batch plus the run carried into it."""
+    batch, n_groups = 65_536, 10**6
+    sizes = np.ones(n_groups, dtype=np.int64)
+    sizes[500_000] = 3 * batch + 123
+    keys = np.repeat(np.arange(n_groups), sizes)
+    batches = (pd.DataFrame({"g": keys[i : i + batch]}) for i in range(0, keys.size, batch))
+    next_key, rows, largest = 0, 0, 0
+    for frame in dd._whole_runs(batches, ["g"]):
+        g = frame["g"].to_numpy()
+        assert g[0] == next_key  # whole runs, each in one frame
+        carried = np.count_nonzero(g == g[0])  # the run a frame starts with
+        assert len(frame) <= batch + carried
+        next_key, rows, largest = g[-1] + 1, rows + len(frame), max(largest, len(frame))
+    assert next_key == n_groups and rows == keys.size
+    assert batch < largest <= batch + sizes.max()
 
 
 def test_with_quantiles_batch_matches_core(spark, many_groups):
